@@ -55,48 +55,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
 
-    # Warm the JVM/codegen paths once with a trivial action so the first
-    # timed query doesn't pay one-time init costs, and warm the parquet
-    # datasource path (reader codegen, filesystem metadata) with a small
-    # real scan — otherwise the first timed query absorbs ~1 s of one-time
-    # scan-pipeline compilation that belongs to session startup, not to it.
-    from zio_analytics_spark.sources.parquet import read_table
-
-    spark.range(1000).selectExpr("sum(id)").collect()
-    read_table(spark, sf_dir, "region").collect()
-    read_table(spark, sf_dir, "lineitem").limit(1000).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # Warm the Python UDF workers: the first pandas-UDF query otherwise pays
-    # ~3 s of one-time worker fork + pandas/pyarrow import across the 32
-    # executor threads — session startup cost, not query cost (workers are
-    # reused for the rest of the session; on a real cluster they live for
-    # the executor lifetime).
-    from pyspark.sql import functions as _F
-
-    @_F.pandas_udf("long")
-    def _warm_udf(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(100_000, numPartitions=32).select(_warm_udf(_F.col("id"))).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    # Warm the parquet WRITE path (committer init, writer codegen): dedup
-    # entries spill their result to parquet (deterministic cache release) and
-    # the first one would otherwise absorb this one-time cost.
-    from zio_analytics_spark.tmpdirs import scratch_dir as _scratch_dir
-
-    spark.range(1000).write.mode("overwrite").parquet(_scratch_dir(prefix="zas_warm_"))
-    # Warm the Python DataSource worker path (plan/pickle/bootstrap is a
-    # one-time ~3 s session cost measured via a tiny scan: first use 3.2 s,
-    # every later scan 0.2-0.4 s) — same session-vs-query accounting as the
-    # pandas-UDF warm-up above.
-    from zio_analytics_spark.sources.pydatasource import register_synthetic_corpus
-
-    register_synthetic_corpus(spark)
-    spark.read.format("synthetic_corpus").option("n_docs", 8).option(
-        "n_shards", 2
-    ).load().write.format("noop").mode("overwrite").save()
+    warm_session(spark, sf_dir)
 
     # --- fixed-work calibration probe (round-8) -----------------------------
     # Two rounds of co-tenancy noise (r5: 14.2 vs 16.0 s identical code;
@@ -466,6 +425,55 @@ def main() -> None:
             file=sys.stderr,
         )
         sys.exit(1)
+
+
+def warm_session(spark, sf_dir: str) -> None:
+    """Pay the session's one-time costs before anything is timed: JVM and
+    codegen init, the parquet read and write paths, the Python UDF workers
+    and the Python DataSource worker path. Timed entries then measure
+    query cost, not session start-up."""
+    # Warm the JVM/codegen paths once with a trivial action so the first
+    # timed query doesn't pay one-time init costs, and warm the parquet
+    # datasource path (reader codegen, filesystem metadata) with a small
+    # real scan — otherwise the first timed query absorbs ~1 s of one-time
+    # scan-pipeline compilation that belongs to session startup, not to it.
+    from zio_analytics_spark.sources.parquet import read_table
+
+    spark.range(1000).selectExpr("sum(id)").collect()
+    read_table(spark, sf_dir, "region").collect()
+    read_table(spark, sf_dir, "lineitem").limit(1000).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    # Warm the Python UDF workers: the first pandas-UDF query otherwise pays
+    # ~3 s of one-time worker fork + pandas/pyarrow import across the 32
+    # executor threads — session startup cost, not query cost (workers are
+    # reused for the rest of the session; on a real cluster they live for
+    # the executor lifetime).
+    from pyspark.sql import functions as _F
+
+    @_F.pandas_udf("long")
+    def _warm_udf(s: pd.Series) -> pd.Series:
+        return s
+
+    spark.range(100_000, numPartitions=32).select(_warm_udf(_F.col("id"))).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    # Warm the parquet WRITE path (committer init, writer codegen): dedup
+    # entries spill their result to parquet (deterministic cache release) and
+    # the first one would otherwise absorb this one-time cost.
+    from zio_analytics_spark.tmpdirs import scratch_dir as _scratch_dir
+
+    spark.range(1000).write.mode("overwrite").parquet(_scratch_dir(prefix="zas_warm_"))
+    # Warm the Python DataSource worker path (plan/pickle/bootstrap is a
+    # one-time ~3 s session cost measured via a tiny scan: first use 3.2 s,
+    # every later scan 0.2-0.4 s) — same session-vs-query accounting as the
+    # pandas-UDF warm-up above.
+    from zio_analytics_spark.sources.pydatasource import register_synthetic_corpus
+
+    register_synthetic_corpus(spark)
+    spark.read.format("synthetic_corpus").option("n_docs", 8).option(
+        "n_shards", 2
+    ).load().write.format("noop").mode("overwrite").save()
 
 
 if __name__ == "__main__":

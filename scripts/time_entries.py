@@ -14,6 +14,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import warm_session  # noqa: E402
 from zio_analytics_spark import catalog  # noqa: E402
 from zio_analytics_spark.session import get_spark  # noqa: E402
 
@@ -32,28 +33,7 @@ def main() -> int:
         del args[i : i + 2]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("time_entries")
-    # Same warm-ups as bench.py (session costs, not query costs).
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from zio_analytics_spark.sources.parquet import read_table
-
-    spark.range(1000).selectExpr("sum(id)").collect()
-    read_table(spark, sf_dir, "region").collect()
-    read_table(spark, sf_dir, "lineitem").limit(1000).write.format("noop").mode(
-        "overwrite"
-    ).save()
-
-    @F.pandas_udf("long")
-    def _warm_udf(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(100_000, numPartitions=32).select(_warm_udf(F.col("id"))).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    from zio_analytics_spark.tmpdirs import scratch_dir
-
-    spark.range(1000).write.mode("overwrite").parquet(scratch_dir(prefix="zas_warm_"))
+    warm_session(spark, sf_dir)
 
     fns = catalog.queries()
     out = {}

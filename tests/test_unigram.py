@@ -174,7 +174,8 @@ def test_validation(spark):
 
 def test_plan_shape(spark):
     # apply-side corpus pass: broadcast dimension join, no cartesian, and
-    # the whole train loop contains no Python UDF (pure Column HOFs)
+    # no per-row Python UDF (training's mapInPandas ends at the
+    # materialized seg table)
     df = spark.createDataFrame(
         [(i, "the cat sat") for i in range(10)], "doc_id long, text string"
     )
@@ -187,43 +188,11 @@ def test_plan_shape(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-@pytest.mark.parametrize("seed", [5, 23])
-def test_engines_equivalent(spark, seed):
-    """Round-17: the arrow (mapInPandas) Viterbi engine must reproduce the
-    sql (Column-HOF) engine EXACTLY — final piece table (counts and
-    ilogp), and the full per-word segmentation including tie-breaks and
-    token order (the test_pq cross-engine pin, for the tokenizer)."""
-    from zio_analytics_spark.operators.unigram import unigram_model
-
-    rng = random.Random(seed)
-    texts = [
-        " ".join(
-            "".join(rng.choice("abcde") for _ in range(rng.randint(1, 9)))
-            for _ in range(rng.randint(2, 12))
-        )
-        for _ in range(30)
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    p_sql, s_sql = unigram_model(df, n_iters=2, max_piece_len=3, top_k=12,
-                                 engine="sql")
-    p_ar, s_ar = unigram_model(df, n_iters=2, max_piece_len=3, top_k=12,
-                               engine="arrow")
-    tbl_sql = {r["piece"]: (r["cnt"], r["ilogp"]) for r in p_sql.collect()}
-    tbl_ar = {r["piece"]: (r["cnt"], r["ilogp"]) for r in p_ar.collect()}
-    assert tbl_ar == tbl_sql
-    seg_sql = {r["word"]: list(r["toks"]) for r in s_sql.collect()}
-    seg_ar = {r["word"]: list(r["toks"]) for r in s_ar.collect()}
-    assert seg_ar == seg_sql  # token-for-token, backtrace order included
-
-
 def test_arrow_is_default_and_in_plan(spark):
-    """The default engine is arrow and the training recount actually runs
-    through MapInPandas (guide §4: the HOF DP was the first-shot cost)."""
+    """The training recount runs through MapInPandas (guide §4: a
+    Column-HOF DP was the first-shot cost)."""
     from zio_analytics_spark.operators import unigram as U
 
-    assert U.VITERBI_ENGINE == "arrow"
     df = spark.createDataFrame(
         [(1, "the cat sat on the mat")], "doc_id long, text string"
     )
@@ -233,42 +202,64 @@ def test_arrow_is_default_and_in_plan(spark):
         U._word_freqs(df, "text", "[a-z]+"), prefix="zas_unigram_voc_"
     )
     plan = (
-        U._viterbi_recount_arrow(vocab, {"t": -1, "h": -1, "e": -1}, 3)
+        U._viterbi_recount(vocab, {"t": -1, "h": -1, "e": -1}, 3)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "MapInPandas" in plan
 
 
-def test_tokenize_matches_naive(spark):
-    from zio_analytics_spark.operators.unigram import unigram_tokenize
+# (seed, alphabet, n_texts, (min, max) words per text, max word length,
+# top_k): the serving corpus, then two wider-alphabet corpora with more
+# ties; every case trains with n_iters=2, max_piece_len=3
+_TOKENIZE_CASES = [
+    (11, "abc", 15, (1, 8), 7, 10),
+    (5, "abcde", 30, (2, 12), 9, 12),
+    (23, "abcde", 30, (2, 12), 9, 12),
+]
 
-    rng = random.Random(11)
-    texts = [
-        " ".join(
-            "".join(rng.choice("abc") for _ in range(rng.randint(1, 7)))
-            for _ in range(rng.randint(1, 8))
+
+def test_tokenize_matches_naive(spark):
+    """Per case: unigram_model's piece table (cnt, ilogp) and its full
+    per-word segmentation (tie-breaks and last-piece-first order
+    included) match the pure-Python reference token for token, and
+    unigram_tokenize reassembles each document in word order."""
+    from zio_analytics_spark.operators.unigram import unigram_model, unigram_tokenize
+
+    n_iters, L = 2, 3
+    for seed, alpha, n_texts, (lo, hi), max_len, top_k in _TOKENIZE_CASES:
+        rng = random.Random(seed)
+        texts = [
+            " ".join(
+                "".join(rng.choice(alpha) for _ in range(rng.randint(1, max_len)))
+                for _ in range(rng.randint(lo, hi))
+            )
+            for _ in range(n_texts)
+        ]
+        df = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
         )
-        for _ in range(15)
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    got = {
-        r["doc_id"]: (list(r["tokens"]), r["n_tokens"])
-        for r in unigram_tokenize(df, n_iters=2, max_piece_len=3, top_k=10).collect()
-    }
-    final = _naive_unigram(texts, 2, 3, 10)
-    tot = sum(c for c, _ in final.values())
-    ilogp = {
-        p: round((math.log(c) - math.log(tot)) * 1e6) for p, (c, _) in final.items()
-    }
-    want = {}
-    for i, t in enumerate(texts):
-        ws = re.findall("[a-z]+", t.lower())
-        if not ws:
-            continue
-        toks = []
-        for w in ws:
-            toks.extend(reversed(_naive_viterbi(w, ilogp, 3)))  # to word order
-        want[i] = (toks, len(toks))
-    assert got == want
+        pieces, seg = unigram_model(df, n_iters=n_iters, max_piece_len=L, top_k=top_k)
+        final = _naive_unigram(texts, n_iters, L, top_k)
+        assert {r["piece"]: (r["cnt"], r["ilogp"]) for r in pieces.collect()} == final
+        ilogp = {p: il for p, (_c, il) in final.items()}
+        assert {r["word"]: list(r["toks"]) for r in seg.collect()} == {
+            w: _naive_viterbi(w, ilogp, L)
+            for t in texts
+            for w in re.findall("[a-z]+", t.lower())
+        }
+        got = {
+            r["doc_id"]: (list(r["tokens"]), r["n_tokens"])
+            for r in unigram_tokenize(
+                df, n_iters=n_iters, max_piece_len=L, top_k=top_k
+            ).collect()
+        }
+        want = {}
+        for i, t in enumerate(texts):
+            ws = re.findall("[a-z]+", t.lower())
+            if not ws:
+                continue
+            toks = []
+            for w in ws:
+                toks.extend(reversed(_naive_viterbi(w, ilogp, L)))  # to word order
+            want[i] = (toks, len(toks))
+        assert got == want

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from zio_analytics_spark.operators.wordpiece import (
+    wordpiece_model,
     wordpiece_segment,
     wordpiece_tokenize,
     wordpiece_train,
@@ -61,6 +62,9 @@ CORPORA = [
     ["low lower lowest", "new newer newest", "wide wider widest",
      "old older oldest bold bolder"],
     ["aaa aa a aaaa", "bab abab baba", "zzz zz z"],  # lhs==rhs overlap runs
+    ["hugs hugging hugged bug bugs pugs pug",
+     "the hug hug hug of bugs and pugs",
+     "aaaa aaa aa a"],  # lhs == rhs run resolution next to real merges
 ]
 
 
@@ -71,8 +75,13 @@ def test_wordpiece_train_matches_naive(spark, corpus_i):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     got = [tuple(r) for r in wordpiece_train(df, n_merges=5).orderBy("iter").collect()]
-    exp, _ = naive_wordpiece(texts, 5)
+    exp, segs = naive_wordpiece(texts, 5)
     assert got == exp
+    # the merged vocab the serving side broadcasts: every word's final
+    # symbols, merge application order and lhs == rhs runs included
+    results, seg = wordpiece_model(df, n_merges=5)
+    assert results == exp
+    assert {r["word"]: list(r["syms"]) for r in seg.collect()} == segs
 
 
 def test_wordpiece_segment_and_tokenize_match_naive(spark):
@@ -216,25 +225,3 @@ def test_wordpiece_apply_can_diverge_from_merge_replay(spark):
         def respell(toks):
             return "".join(t[2:] if t.startswith("##") else t for t in toks)
         assert respell(munch[i]) == respell(replay[i])
-
-
-def test_engines_equivalent(spark):
-    """Round-17: the arrow training engine (Python counting/merging, SQL
-    scoring) must reproduce the sql (Column-HOF) engine EXACTLY — every
-    per-round row and the final merged segmentation."""
-    from zio_analytics_spark.operators.wordpiece import wordpiece_model
-
-    texts = [
-        "hugs hugging hugged bug bugs pugs pug",
-        "the hug hug hug of bugs and pugs",
-        "aaaa aaa aa a",  # lhs == rhs run-resolution case
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    res_sql, seg_sql = wordpiece_model(df, n_merges=5, engine="sql")
-    res_ar, seg_ar = wordpiece_model(df, n_merges=5, engine="arrow")
-    assert res_ar == res_sql
-    d_sql = {r["word"]: list(r["syms"]) for r in seg_sql.collect()}
-    d_ar = {r["word"]: list(r["syms"]) for r in seg_ar.collect()}
-    assert d_ar == d_sql

@@ -4576,7 +4576,7 @@ def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "total",
     )
-    return _run_complete(out, "stream_wc")
+    return _run_stream(out, "stream_wc", "complete")
 
 
 # =====================================================================
@@ -5089,9 +5089,15 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_table(spark, sf_dir, "events")
 
 
-def _run_complete(out: DataFrame, prefix: str, partitions: int = 8) -> DataFrame:
-    """Drive a bounded aggregated stream to completion (complete mode →
-    batch-equivalent results) and return the materialized memory table.
+def _run_stream(
+    out: DataFrame, prefix: str, mode: str, partitions: int = 8
+) -> DataFrame:
+    """Drive a bounded stream to completion in output ``mode`` and return
+    the materialized memory table. "complete" suits aggregated streams
+    (batch-equivalent results); "append" suits stateful maps, joins and
+    applyInPandasWithState (the only mode it emits in). The bounded file
+    source delivers everything in one trigger, so append output over a
+    single batch is deterministic.
 
     State-partition sizing (round-7): each micro-batch loads + commits one
     state-store instance per shuffle partition, so a tiny local stream at
@@ -5106,7 +5112,7 @@ def _run_complete(out: DataFrame, prefix: str, partitions: int = 8) -> DataFrame
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     try:
-        q = out.writeStream.outputMode("complete").format("memory").queryName(name).start()
+        q = out.writeStream.outputMode(mode).format("memory").queryName(name).start()
         try:
             q.processAllAvailable()
         finally:
@@ -5143,28 +5149,7 @@ def q_streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n",
     )
-    return _run_complete(out, "stream_slide")
-
-
-def _run_append(out: DataFrame, prefix: str, partitions: int = 8) -> DataFrame:
-    """Drive a bounded stateful stream to completion in APPEND mode (the
-    only mode applyInPandasWithState emits in) and return the memory table.
-    State-partition sizing as in :func:`_run_complete`."""
-    import uuid
-
-    spark = out.sparkSession
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
-        q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.sql(f"SELECT * FROM {name}")
+    return _run_stream(out, "stream_slide", "complete")
 
 
 @register(
@@ -5218,7 +5203,7 @@ def q_streaming_fold_window_group_sliding(spark: SparkSession, sf_dir: str) -> D
         top2_fold,
         "window_start timestamp, window_end timestamp, event_type string, n long, top2_sum double",
     )
-    return _run_append(out, "stream_gfold_slide")
+    return _run_stream(out, "stream_gfold_slide", "append")
 
 
 _SESSION_FOLD_ORACLE = CATALOG["fold_window_custom_session"].oracle
@@ -5257,7 +5242,7 @@ def q_streaming_fold_window_group_session(spark: SparkSession, sf_dir: str) -> D
         range_fold,
         "window_start timestamp, window_end timestamp, event_type string, value_range double",
     )
-    return _run_append(out, "stream_gfold_sess")
+    return _run_stream(out, "stream_gfold_sess", "append")
 
 
 @register(
@@ -5293,7 +5278,7 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n_orders").alias("n_orders"),
         F.max("lifetime_value").alias("lifetime_value"),
     )
-    return _run_complete(agg, "stream_enrich")
+    return _run_stream(agg, "stream_enrich", "complete")
 
 
 @register(
@@ -5853,7 +5838,7 @@ def q_source_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataF
     agg = st.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n"), F.sum("doc_id").alias("id_sum")
     )
-    return _run_complete(agg, "stream_pyds")
+    return _run_stream(agg, "stream_pyds", "complete")
 
 
 @register(
@@ -6246,30 +6231,6 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_k(agg, [F.col("n_sessions").desc(), F.col("path")], 10)
 
 
-def _run_append(out: DataFrame, prefix: str, partitions: int = 8) -> DataFrame:
-    """Drive a bounded non-aggregated stream (stateful map / join) to
-    completion in append mode and return the materialized memory table.
-    The bounded file source delivers everything in one trigger, so append
-    output over a single batch is deterministic. State-partition sizing as
-    in the aggregated helper: one state-store instance per shuffle
-    partition per micro-batch — size to volume, restore after."""
-    import uuid
-
-    spark = out.sparkSession
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
-        q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.sql(f"SELECT * FROM {name}")
-
-
 @register(
     "streaming_stateful_running_sum",
     oracle="""
@@ -6308,7 +6269,7 @@ def q_streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_schema="user_id long, event_id long, running_sum double",
         state_schema="acc double",
     )
-    result = _run_append(out, "stream_state")
+    result = _run_stream(out, "stream_state", "append")
     return result.select(
         "user_id", "event_id", F.round("running_sum", 2).alias("running_sum")
     )
@@ -6371,7 +6332,7 @@ def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_schema="user_id long, event_id long, ewma double",
         state_schema="acc double",
     )
-    return _run_append(out, "stream_ewma")
+    return _run_stream(out, "stream_ewma", "append")
 
 
 @register(
@@ -6421,7 +6382,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (per-partition state-store commits dominate; round-7 interleaved
     # re-measure: 8 ≈ 4.1 s, 4 ≈ 3.6 s, 2 ≈ 3.5 s — 4 keeps join
     # parallelism headroom for the ~1 s further win)
-    return _run_append(out, "stream_ijoin", partitions=4)
+    return _run_stream(out, "stream_ijoin", "append", partitions=4)
 
 
 @register(
@@ -6616,7 +6577,7 @@ def q_streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("session_window.end")).alias("window_end"),
         "n",
     )
-    return _run_complete(out, "stream_sess")
+    return _run_stream(out, "stream_sess", "complete")
 
 
 @register(
@@ -7131,7 +7092,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = streaming_exact_dedup(keyed, text_col="content").select(
         "event_type", "user_bucket"
     )
-    return _run_append(dd, "stream_dedup")
+    return _run_stream(dd, "stream_dedup", "append")
 
 
 @register(
@@ -9859,7 +9820,7 @@ def q_streaming_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("w.end").alias("window_end"),
         "n",
     )
-    return _run_complete(out, "stream_dyn_sess")
+    return _run_stream(out, "stream_dyn_sess", "complete")
 
 
 @register(
@@ -9970,7 +9931,7 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
     # 4 ≈ 3.6 s, 2 ≈ 3.5 s — 4 keeps parallelism headroom). Sizing state
     # partitions to volume is the same decision a cluster deployment
     # makes (upward, there).
-    res = _run_append(out, "stream_ojoin", partitions=4)
+    res = _run_stream(out, "stream_ojoin", "append", partitions=4)
     return res.where(F.col("user_id") >= 0)
 
 
@@ -10587,7 +10548,7 @@ def q_streaming_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5("text").alias("text_md5"),
         F.length("text").cast("long").alias("n_chars"),
     )
-    return _run_append(out, "stream_html_extract")
+    return _run_stream(out, "stream_html_extract", "append")
 
 
 _HTML_SYNTH_V3_SQL = (
@@ -11951,7 +11912,7 @@ def q_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_schema="user_id long, event_id long, cusum_hi double, cusum_lo double",
         state_schema="s array<double>",
     )
-    result = _run_append(out, "stream_cusum")
+    result = _run_stream(out, "stream_cusum", "append")
     hi6 = F.round("cusum_hi", 6)
     lo6 = F.round("cusum_lo", 6)
     return result.select(
@@ -13722,7 +13683,7 @@ def q_streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_schema="user_id long, event_id long, level double, trend double",
         state_schema="lvl double, trd double, seen int",
     )
-    return _run_append(out, "stream_holt")
+    return _run_stream(out, "stream_holt", "append")
 
 
 def _holt_winters_stream_oracle(m: int = 4) -> str:
@@ -13795,7 +13756,7 @@ def q_streaming_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s1 double, s2 double, s3 double, s4 double"
         ),
     )
-    return _run_append(out, "stream_holt_winters")
+    return _run_stream(out, "stream_holt_winters", "append")
 
 
 @register(
@@ -14599,7 +14560,7 @@ def q_streaming_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = logreg_score(feats(st), w, ["x1", "x2"]).select(
         "doc_id", "lang", "score", (F.col("score") >= 0.5).alias("keep")
     )
-    return _run_append(scored, "stream_quality")
+    return _run_stream(scored, "stream_quality", "append")
 
 
 def _unigram_tokenize_oracle(n_iters: int = 2, L: int = 3, top_k: int = 64) -> str:
@@ -15306,7 +15267,7 @@ def q_streaming_decode_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame
     out = decode_quarantine(payloads).select(
         "doc_id", "ok", "width", "height", "mean_byte"
     )
-    return _run_append(out, "stream_quarantine")
+    return _run_stream(out, "stream_quarantine", "append")
 
 
 @register(
@@ -16807,7 +16768,7 @@ def q_streaming_frontier_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("host", F.regexp_extract("url", r"://([^/]*)", 1))
     )
     out = apply_robots(frontier, F.broadcast(rules)).select("doc_id", "url", "allowed")
-    return _run_append(out, "stream_frontier")
+    return _run_stream(out, "stream_frontier", "append")
 
 
 #: synthesized robots.txt for robots_frontier_filter — one body per host,

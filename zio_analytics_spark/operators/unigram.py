@@ -15,8 +15,8 @@ bit-for-bit:
 - FIXED iteration count (no convergence test);
 - piece log-probs are INTEGER fixed-point: ``ilogp = round((ln(cnt) −
   ln(total)) · 10⁶)`` as BIGINT — the Viterbi DP then sums/compares
-  integers only, so path scores are exact and engine-independent (the
-  single per-piece ``ln`` is the only float op, pinned by the rounding);
+  integers only, so path scores are exact (the single per-piece ``ln``
+  is the only float op, evaluated in the JVM and pinned by the rounding);
 - Viterbi tie-break: among equal-score segmentations the backtrace picks
   the match with the SMALLEST start (= longest last piece), recursively;
 - seed selection tie-break: candidates rank by (count DESC, piece ASC).
@@ -27,11 +27,13 @@ Scale design (the same discipline as bpe.py):
   every EM iteration runs on that table — iteration cost is independent
   of corpus row count, so a 100 TB corpus trains at the same per-round
   cost as a 1 GB one (only the single vocab-building scan scales).
-- The piece table is bounded by ``top_k + |alphabet|`` rows and BROADCASTS
-  into the substring-match join; the per-word Viterbi (DP + backtrace) is
-  a pure Column higher-order-function pipeline — whole-stage codegen, no
-  UDF, no driver loop over rows. Driver state per iteration: one scalar
-  (nothing — the total enters the plan via a broadcast 1-row aggregate).
+- The piece table is bounded by ``top_k + |alphabet|`` rows and lives on
+  the driver. Each EM round scores it with one tiny JVM projection
+  (:func:`_ilogp_rows`) and ships the ``piece → ilogp`` dict in the task
+  closure of ONE ``mapInPandas`` that runs the per-word Viterbi (DP +
+  backtrace) and recounts pieces into per-task Counter partials; a
+  groupBy sum merges them. The vocab fans out over
+  :func:`_vocab_parts` tasks, sized once per run.
 - Single characters are never pruned (floor count 1): full coverage is
   guaranteed, so the DP never sees an unreachable position.
 
@@ -55,20 +57,6 @@ from zio_analytics_spark.operators.bpe import WORD_PATTERN
 
 __all__ = ["unigram_train", "unigram_model", "unigram_segment", "unigram_tokenize"]
 
-#: Default Viterbi engine (round-17, guide §4). "arrow" runs the per-word DP
-#: as ONE mapInPandas over the Zipf-bounded vocab — the piece model is a
-#: bounded Python dict closure, scores are the same int64 fixed-point values
-#: (exact in any engine), and the recount leaves each task as pre-aggregated
-#: (piece, cnt) partials. "sql" keeps the original pure-Column-HOF pipeline;
-#: it is the cross-engine reference test_unigram pins the arrow path against.
-#: Why: the HOF DP is CodegenFallback and its plan is rebuilt per EM round —
-#: Catalyst re-analysis + Janino compile dominated unigram_train's first shot
-#: (~10.4 s measured r16; data work is milliseconds at any SF). ilogp is
-#: STILL computed by the same Spark expression (_with_ilogp, one tiny job on
-#: the bounded piece table) so the only float op keeps bit-identical
-#: JVM semantics in both engines.
-VITERBI_ENGINE = "arrow"
-
 
 def _word_freqs(df: DataFrame, text_col: str, word_pattern: str) -> DataFrame:
     """One corpus scan → the Zipf-bounded ``(word, freq)`` table."""
@@ -83,42 +71,14 @@ def _word_freqs(df: DataFrame, text_col: str, word_pattern: str) -> DataFrame:
     )
 
 
-def _substr_structs(max_piece_len: int):
-    """All (s, e, piece) substrings of ``word`` with 1 ≤ e−s ≤ max_piece_len,
-    0-based [s, e) offsets — one flatten(transform(transform)) expression."""
-    return F.expr(
-        f"flatten(transform(sequence(0, length(word) - 1), s -> "
-        f"transform(sequence(1, least({int(max_piece_len)}, length(word) - s)), "
-        f"l -> struct(s AS s, s + l AS e, substring(word, s + 1, l) AS piece))))"
-    )
-
-
-def _with_ilogp(pieces: DataFrame) -> DataFrame:
-    """Attach the fixed-point unigram log-prob: ilogp = round((ln(cnt) −
-    ln(Σcnt))·10⁶) as BIGINT. The total enters the plan as a broadcast
-    1-row aggregate — no collect, no driver round-trip."""
-    tot = pieces.agg(F.sum("cnt").alias("__tot"))
-    return (
-        pieces.crossJoin(F.broadcast(tot))
-        .withColumn(
-            "ilogp",
-            F.round(
-                (F.log(F.col("cnt").cast("double")) - F.log(F.col("__tot").cast("double")))
-                * F.lit(1000000.0)
-            ).cast("long"),
-        )
-        .drop("__tot")
-    )
-
-
 def _ilogp_rows(spark: SparkSession, pairs: list) -> list:
     """``[(piece, cnt, ilogp)]`` for a bounded driver-side piece list, via
-    ONE tiny JVM projection job. The expression is _with_ilogp's exactly —
-    ``round((ln(cnt) − ln(tot))·10⁶)`` with both operands cast long→double
-    in the JVM — but the total enters as a literal (it is an exact integer
-    sum the driver already holds), so no aggregate and no broadcast
-    exchange: the r16 shape cost ~1-3 s PER ROUND in plan/exchange
-    overhead on an 88-row local table (measured r17)."""
+    ONE tiny JVM projection job: ``round((ln(cnt) − ln(tot))·10⁶)`` with
+    both operands cast long→double in the JVM. The total enters as a
+    literal (it is an exact integer sum the driver already holds), so no
+    aggregate and no broadcast exchange: a broadcast 1-row aggregate cost
+    ~1-3 s PER ROUND in plan/exchange overhead on an 88-row local table
+    (measured r17)."""
     import pandas as pd
 
     tot = sum(c for _, c in pairs)
@@ -152,13 +112,15 @@ def _pieces_df(spark: SparkSession, scored: list) -> DataFrame:
 
 
 def _viterbi_toks_py(word: str, lp: dict, L: int) -> list:
-    """Pure-Python mirror of the Column-HOF Viterbi (same DP, same
-    smallest-start tie-break, tokens LAST-PIECE-FIRST). All scores are the
-    int64 fixed-point ``ilogp`` values — integer sums and compares, so the
-    result is exact and engine-independent (pinned vs the sql engine in
-    test_unigram::test_engines_equivalent). Raises on a word the piece set
-    cannot cover — impossible in training, where every single character of
-    the vocab is a floored piece (the coverage guarantee)."""
+    """Maximum-likelihood segmentation of one word: forward DP
+    ``best[e] = max over pieces w[s:e] of best[s] + ilogp``, then a
+    backtrace that picks the SMALLEST start among optimal matches (the
+    deterministic tie-break). Tokens come out LAST-PIECE-FIRST. All scores
+    are the int64 fixed-point ``ilogp`` values — integer sums and
+    compares, so the result is exact (pinned against the pure-Python
+    reference in test_unigram). Raises on a word the piece set cannot
+    cover — impossible in training, where every single character of the
+    vocab is a floored piece (the coverage guarantee)."""
     n = len(word)
     best = [0] * (n + 1)
     for e in range(1, n + 1):
@@ -208,11 +170,12 @@ def _fan_out(df: DataFrame, n_parts: int) -> DataFrame:
     return df.repartition(int(n_parts))
 
 
-def _viterbi_paths_arrow(
+def _viterbi_segs(
     words: DataFrame, lp: dict, max_piece_len: int, n_parts: int = 1
 ) -> DataFrame:
-    """Arrow engine for :func:`_viterbi_paths`: ``(word, freq, toks)`` via one
-    mapInPandas — the bounded piece→ilogp dict rides the task closure."""
+    """Segment every vocab word under the piece model: ``(word, freq,
+    toks)`` via one mapInPandas — the bounded piece→ilogp dict rides the
+    task closure."""
     import pandas as pd
 
     L = int(max_piece_len)
@@ -232,10 +195,10 @@ def _viterbi_paths_arrow(
     )
 
 
-def _viterbi_recount_arrow(
+def _viterbi_recount(
     words: DataFrame, lp: dict, max_piece_len: int, n_parts: int = 1
 ) -> DataFrame:
-    """Arrow engine for the EM recount: Viterbi + piece recount in the SAME
+    """The EM recount: Viterbi + piece recount in the SAME
     pass, leaving each task as pre-aggregated ``(piece, cnt)`` partials
     (map-side combine in Python — guide §2.3: aggregate before you shuffle;
     rows out per task ≈ |pieces|, not |vocab|·|toks|)."""
@@ -260,100 +223,10 @@ def _viterbi_recount_arrow(
     )
 
 
-def _viterbi_paths(
-    words: DataFrame, scored_pieces: DataFrame, max_piece_len: int
-) -> DataFrame:
-    """Maximum-likelihood segmentation of every vocab word under the piece
-    model: returns ``(word, freq, toks array<string>)``.
-
-    All pure Column HOFs (codegen, no UDF):
-    1. explode the word's (s, e, piece) substrings, broadcast-join the
-       piece table → per-word match list ``ms``;
-    2. DP forward pass: ``best[e] = max over matches (s,e) of best[s]+lp``
-       via ``aggregate`` over positions (integer scores — exact);
-    3. backtrace as a position PATH [n, s₁, s₂, …, 0] (ties → smallest
-       start), then slice the word along consecutive path entries. The
-       path encoding (a flat bigint array, not a struct accumulator)
-       deliberately matches the DuckDB oracle's replay shape.
-    Tokens come out LAST-PIECE-FIRST; counting and sizing don't care.
-    """
-    subs = words.select("word", "freq", F.explode(_substr_structs(max_piece_len)).alias("m"))
-    mt = (
-        subs.join(
-            F.broadcast(scored_pieces.select("piece", "ilogp")),
-            F.col("m.piece") == F.col("piece"),
-        )
-        .groupBy("word", "freq")
-        .agg(
-            F.collect_list(
-                F.struct(
-                    F.col("m.s").cast("long").alias("s"),
-                    F.col("m.e").cast("long").alias("e"),
-                    F.col("ilogp").alias("lp"),
-                )
-            ).alias("ms")
-        )
-    )
-    best = F.aggregate(
-        F.sequence(F.lit(1), F.length("word")),
-        F.array(F.lit(0).cast("long")),
-        lambda acc, e: F.concat(
-            acc,
-            F.array(
-                F.array_max(
-                    F.transform(
-                        F.filter(F.col("ms"), lambda m: m["e"] == e),
-                        lambda m: F.element_at(acc, (m["s"] + 1).cast("int")) + m["lp"],
-                    )
-                )
-            ),
-        ),
-    )
-    dp = mt.withColumn("best", best)
-
-    def _chosen_s(acc):
-        # smallest start among matches ending at the current position whose
-        # score is on the optimal path — the deterministic tie-break
-        cur = F.element_at(acc, -1)
-        return F.array_min(
-            F.transform(
-                F.filter(
-                    F.col("ms"),
-                    lambda m: (m["e"] == cur)
-                    & (
-                        F.element_at(F.col("best"), (m["s"] + 1).cast("int")) + m["lp"]
-                        == F.element_at(F.col("best"), (cur + 1).cast("int"))
-                    ),
-                ),
-                lambda m: m["s"],
-            )
-        )
-
-    path = F.aggregate(
-        F.sequence(F.lit(1), F.length("word")),
-        F.array(F.length("word").cast("long")),
-        lambda acc, _: F.when(F.element_at(acc, -1) <= 0, acc).otherwise(
-            F.concat(acc, F.array(_chosen_s(acc)))
-        ),
-    )
-    bt = dp.withColumn("path", path)
-    toks = F.transform(
-        F.sequence(F.lit(1), F.size("path") - 1),
-        lambda i: F.col("word").substr(
-            (F.element_at(F.col("path"), (i + 1).cast("int")) + 1).cast("int"),
-            (
-                F.element_at(F.col("path"), i.cast("int"))
-                - F.element_at(F.col("path"), (i + 1).cast("int"))
-            ).cast("int"),
-        ),
-    )
-    return bt.select("word", "freq", toks.alias("toks"))
-
-
-def _seed_cand_arrow(
+def _seed_cand(
     vocab: DataFrame, max_piece_len: int, n_parts: int = 1
 ) -> DataFrame:
-    """Arrow engine for the seed candidate count: substring enumeration +
+    """The seed candidate count: substring enumeration +
     per-task Counter partials in one mapInPandas (same partial-aggregate
     discipline as the recount — the groupBy sum downstream is exact)."""
     import pandas as pd
@@ -384,7 +257,6 @@ def _seed_pieces(
     vocab: DataFrame,
     max_piece_len: int,
     top_k: int,
-    engine: str | None = None,
     n_parts: int = 1,
 ) -> tuple[DataFrame, DataFrame]:
     """Seed candidate set: every substring of length ≤ max_piece_len,
@@ -392,19 +264,11 @@ def _seed_pieces(
     (the coverage floor) plus the ``top_k`` multi-char candidates by
     (count DESC, piece ASC) — a TakeOrdered, never a global window rank.
     Returns (pieces0, alphabet)."""
-    if (engine or VITERBI_ENGINE) == "arrow":
-        cand = (
-            _seed_cand_arrow(vocab, max_piece_len, n_parts)
-            .groupBy("piece")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    else:
-        cand = (
-            vocab.select("freq", F.explode(_substr_structs(max_piece_len)).alias("m"))
-            .select("freq", F.col("m.piece").alias("piece"))
-            .groupBy("piece")
-            .agg(F.sum("freq").alias("cnt"))
-        )
+    cand = (
+        _seed_cand(vocab, max_piece_len, n_parts)
+        .groupBy("piece")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
     singles = cand.where(F.length("piece") == 1)
     multi = (
         cand.where(F.length("piece") > 1)
@@ -420,60 +284,42 @@ def _em_driver(
     n_iters: int,
     max_piece_len: int,
     top_k: int,
-    engine: str | None = None,
     n_parts: int | None = None,
 ) -> list[tuple[str, int]]:
     """Run ``n_iters`` hard-EM rounds with BOUNDED driver state; returns the
     FINAL ``[(piece, cnt), …]`` list.
 
     The piece table is bounded by ``top_k + |alphabet|`` rows, so it is the
-    same class of driver state as a k-means codebook or a BPE argmax row —
-    each round does ONE Spark job (the Viterbi recount collect) instead of
-    the round-9 persist+count barrier pair, and the round's piece model
-    re-enters the plan as a broadcast ``createDataFrame``. Semantics are
-    byte-identical to the DataFrame formulation the catalog oracle replays:
-    multi-char pieces keep their recount, alphabet singles floor at 1 (the
-    coverage guarantee), counts are exact BIGINT sums. ``vocab`` should be
-    materialized/persisted by the caller — every round re-scans it.
-
-    Engine (round-17): on the default "arrow" path each round runs the
-    bounded ilogp job (same Spark expression as before — the one float op
-    keeps JVM semantics) plus ONE mapInPandas recount job whose plan is
-    two nodes; the "sql" path keeps the per-round Column-HOF Viterbi plan
-    (re-analyzed + Janino-compiled every round — the r16-measured 10.4 s
-    first-shot)."""
-    eng = engine or VITERBI_ENGINE
+    same class of driver state as a k-means codebook or a BPE argmax row.
+    Each round runs the bounded ilogp job (the one float op keeps JVM
+    semantics) plus ONE mapInPandas recount job whose plan is two nodes,
+    with the round's piece model in the task closure — a constant plan
+    shape, so no round pays Catalyst re-analysis or codegen for a
+    per-round expression (a Column-HOF Viterbi cost 10.4 s first-shot,
+    measured r16). Semantics are byte-identical to the SQL formulation the
+    catalog oracle replays: multi-char pieces keep their recount, alphabet
+    singles floor at 1 (the coverage guarantee), counts are exact BIGINT
+    sums. ``vocab`` should be materialized/persisted by the caller — every
+    round re-scans it."""
     # one cheap count on the checkpointed vocab sizes EVERY Python stage of
     # the run (seed, per-round recounts, the caller's seg pass)
     if n_parts is None:
-        n_parts = _vocab_parts(vocab.count(), spark) if eng == "arrow" else 1
-    pieces0, _alpha_df = _seed_pieces(
-        vocab, max_piece_len, top_k, engine=eng, n_parts=n_parts
-    )
+        n_parts = _vocab_parts(vocab.count(), spark)
+    pieces0, _alpha_df = _seed_pieces(vocab, max_piece_len, top_k, n_parts)
     rows = pieces0.collect()  # bounded: all singles + top_k multis
     cur: list[tuple[str, int]] = sorted((r["piece"], int(r["cnt"])) for r in rows)
     # WORD_PATTERN-extracted words are plain codepoint strings on both
     # sides, so Python len() and Spark length() agree on "single char"
     alphabet = sorted(p for p, _ in cur if len(p) == 1)
     for _ in range(n_iters):
-        if eng == "arrow":
-            # bounded: |pieces| rows through the SAME ilogp expression
-            lp = {p: int(il) for p, _c, il in _ilogp_rows(spark, cur)}
-            counts = (
-                _viterbi_recount_arrow(vocab, lp, max_piece_len, n_parts)
-                .groupBy("piece")
-                .agg(F.sum("cnt").alias("cnt"))
-                .collect()
-            )
-        else:
-            cur_df = spark.createDataFrame(cur, "piece string, cnt long")
-            counts = (
-                _viterbi_paths(vocab, _with_ilogp(cur_df), max_piece_len)
-                .select("freq", F.explode("toks").alias("piece"))
-                .groupBy("piece")
-                .agg(F.sum("freq").alias("cnt"))
-                .collect()
-            )
+        # bounded: |pieces| rows through the ilogp expression
+        lp = {p: int(il) for p, _c, il in _ilogp_rows(spark, cur)}
+        counts = (
+            _viterbi_recount(vocab, lp, max_piece_len, n_parts)
+            .groupBy("piece")
+            .agg(F.sum("cnt").alias("cnt"))
+            .collect()
+        )
         cmap = {r["piece"]: int(r["cnt"]) for r in counts}
         cur = sorted(
             [(p, c) for p, c in cmap.items() if len(p) > 1]
@@ -489,19 +335,16 @@ def unigram_train(
     max_piece_len: int = 3,
     top_k: int = 64,
     word_pattern: str = WORD_PATTERN,
-    engine: str | None = None,
 ) -> DataFrame:
     """Train a unigram-LM tokenizer vocabulary (hard-EM, fixed rounds).
 
     Returns the final piece table ``(piece, cnt, ilogp)``: surviving
     pieces with their last-round Viterbi counts and fixed-point unigram
     log-probs. Deterministic end to end (see module docstring), so the
-    catalog oracle replays every EM round in SQL. ``engine`` selects the
-    Viterbi implementation ("arrow" default / "sql" reference — identical
-    results, pinned in test_unigram).
+    catalog oracle replays every EM round in SQL. The BOUNDED final table
+    ships as an Arrow local frame — nothing to recompute, nothing
+    clearCache() can evict.
     """
-    from zio_analytics_spark.tmpdirs import materialize_table
-
     if n_iters < 1:
         raise ValueError(f"n_iters must be >= 1, got {n_iters}")
     if max_piece_len < 1:
@@ -512,17 +355,8 @@ def unigram_train(
     # cluster_duplicates / linkage checkpoint — §5); the parquet committer
     # alone cost 1.4-2.7 s per write on this host (measured r17)
     vocab = _word_freqs(df, text_col, word_pattern).localCheckpoint()
-    eng = engine or VITERBI_ENGINE
-    final = _em_driver(spark, vocab, n_iters, max_piece_len, top_k, engine=eng)
-    if eng == "arrow":
-        # same values as _with_ilogp (the JVM expression ran in
-        # _ilogp_rows); the BOUNDED final table ships as an Arrow local
-        # frame — nothing to recompute, nothing clearCache() can evict
-        return _pieces_df(spark, _ilogp_rows(spark, final))
-    return materialize_table(
-        _with_ilogp(spark.createDataFrame(final, "piece string, cnt long")),
-        prefix="zas_unigram_",
-    )
+    final = _em_driver(spark, vocab, n_iters, max_piece_len, top_k)
+    return _pieces_df(spark, _ilogp_rows(spark, final))
 
 
 def unigram_model(
@@ -532,21 +366,20 @@ def unigram_model(
     max_piece_len: int = 3,
     top_k: int = 64,
     word_pattern: str = WORD_PATTERN,
-    engine: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """TRAIN-OFFLINE artifact pair — the deployment split the round-9
     bench breach asked for (VERDICT r9 #1; the quality_logreg_train/score
     shape from classify.py): train ONCE, hand the artifacts to every
     serving call instead of re-running EM inside each query.
 
-    Returns ``(pieces, seg)``, both materialized parquet scans:
+    Returns ``(pieces, seg)``:
 
     - ``pieces`` — ``(piece, cnt, ilogp)``, exactly :func:`unigram_train`'s
-      output;
+      output (a bounded Arrow local frame);
     - ``seg`` — ``(word, toks array<string>)``, the final model's Viterbi
       segmentation of the Zipf-bounded vocab (tokens last-piece-first, the
       backtrace order) — the dimension both :func:`unigram_segment` and
-      :func:`unigram_tokenize` broadcast.
+      :func:`unigram_tokenize` broadcast, as a materialized parquet scan.
 
     At 100 TB these are the slim model tables a pipeline stores next to
     the tokenizer config; every downstream corpus pass is then one scan +
@@ -559,24 +392,12 @@ def unigram_model(
         raise ValueError(f"max_piece_len must be >= 1, got {max_piece_len}")
     spark = df.sparkSession
     vocab = _word_freqs(df, text_col, word_pattern).localCheckpoint()
-    eng = engine or VITERBI_ENGINE
-    n_parts = _vocab_parts(vocab.count(), spark) if eng == "arrow" else None
-    final = _em_driver(
-        spark, vocab, n_iters, max_piece_len, top_k, engine=eng, n_parts=n_parts
-    )
-    if eng == "arrow":
-        scored = _ilogp_rows(spark, final)  # same JVM expression, one job
-        pieces = _pieces_df(spark, scored)
-        lp = {p: int(il) for p, _c, il in scored}
-        seg_df = _viterbi_paths_arrow(
-            vocab, lp, max_piece_len, n_parts
-        ).select("word", "toks")
-    else:
-        pieces = materialize_table(
-            _with_ilogp(spark.createDataFrame(final, "piece string, cnt long")),
-            prefix="zas_unigram_",
-        )
-        seg_df = _viterbi_paths(vocab, pieces, max_piece_len).select("word", "toks")
+    n_parts = _vocab_parts(vocab.count(), spark)
+    final = _em_driver(spark, vocab, n_iters, max_piece_len, top_k, n_parts)
+    scored = _ilogp_rows(spark, final)  # the JVM ilogp expression, one job
+    pieces = _pieces_df(spark, scored)
+    lp = {p: int(il) for p, _c, il in scored}
+    seg_df = _viterbi_segs(vocab, lp, max_piece_len, n_parts).select("word", "toks")
     seg = materialize_table(seg_df, prefix="zas_unigram_seg_")
     return pieces, seg
 

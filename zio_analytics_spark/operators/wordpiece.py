@@ -18,15 +18,17 @@ while ``##a`` + ``##b`` yields ``##ab``.
 
 Scale design (identical shape to bpe.py, and the reason all three trainers
 share it): ONE corpus scan builds the Zipf-bounded ``(word, freq, syms)``
-vocab; per merge round, pair counts AND symbol unigram counts are two
-map-side-combinable aggregates over that vocab; the score argmax brings
-ONE row to the driver; merge application is the same pure-Column
-stack-scan HOF (no UDF). Iteration cost is corpus-size-independent — at
-100 TB the distinct-word table is still broadcast-scale.
+vocab; per merge round, pair counts AND symbol unigram counts come out of
+ONE ``mapInPandas`` pass with per-task Counter partials, summed exactly by
+a groupBy; the score argmax brings ONE row to the driver. Learned merges
+apply in Python inside the NEXT round's count job (a greedy-leftmost
+stack fold), so each round is one small job of constant plan shape.
+Iteration cost is corpus-size-independent — at 100 TB the distinct-word
+table is still broadcast-scale.
 
 Determinism contract (what makes the DuckDB oracle exact): the score is
 ``cnt::double / (lhs_cnt · rhs_cnt)`` — one IEEE-double division of exact
-integers, computed by the same expression in both engines — with
+integers, computed by a Spark SQL expression — with
 ``(score DESC, lhs, rhs)`` tiebreak; symbol-count products stay far below
 2^53 at any tested SF, so the double is exact anyway.
 
@@ -45,19 +47,6 @@ from zio_analytics_spark.operators.bpe import WORD_PATTERN, _words
 __all__ = ["wordpiece_train", "wordpiece_model", "wordpiece_segment",
            "wordpiece_tokenize", "wordpiece_vocab_pieces", "wordpiece_apply",
            "wordpiece_results_df"]
-
-#: Default training engine (round-17, guide §4). "arrow": pair/symbol
-#: counting runs as ONE mapInPandas with per-task Counter partials, merges
-#: apply in Python inside the NEXT round's count job (the base vocab is
-#: localCheckpoint'd once; re-apply depth is bounded by
-#: _WP_CHECKPOINT_EVERY), and the post-merge symbol total rides the next
-#: round's job as an Observation (bpe's pattern) — one small constant-shape
-#: job per round. Scoring, the argmax and its (score DESC, lhs, rhs)
-#: tie-break stay in Spark SQL with the same expressions, so every number
-#: the oracle pins is produced by the same engine as before. "sql" keeps
-#: the r16 Column-HOF loop — the cross-engine reference test_wordpiece
-#: pins the arrow path against.
-WP_ENGINE = "arrow"
 
 #: bound the Python re-apply depth: every this-many merges the vocab is
 #: re-checkpointed so round k never replays more than this many merges
@@ -94,35 +83,12 @@ def _wp_vocab(df: DataFrame, text_col: str, word_pattern: str) -> DataFrame:
     )
 
 
-def _merge_expr_wp(lhs: str, rhs: str):
-    """One greedy WordPiece merge as a Column HOF — bpe._merge_expr with
-    the ``##``-stripping concat rule. The greedy-leftmost argument holds
-    unchanged: a just-merged stack top spells ``lhs + strip(rhs)`` which is
-    strictly longer than ``lhs`` (a bare ``##`` is never a symbol), so it
-    can never re-match as ``lhs`` — except when lhs == rhs, where the same
-    even-offset-within-run resolution as BPE applies."""
-    merged = lhs + _strip_cont(rhs)
-    empty = F.array().cast("array<string>")
-
-    def step(acc, x):
-        mergeable = (
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(lhs))
-            & (x == F.lit(rhs))
-        )
-        return F.when(
-            mergeable,
-            F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(F.lit(merged))),
-        ).otherwise(F.concat(acc, F.array(x)))
-
-    return F.aggregate(F.col("syms"), empty, step)
-
-
 def _apply_merges_py(syms, merges) -> list:
-    """Exact Python mirror of :func:`_merge_expr_wp`'s stack fold, applied
-    for each learned merge in order: greedy-leftmost, a just-merged top
-    never re-matches as lhs except in the lhs == rhs run case, which the
-    linear scan resolves identically (even offsets within a run merge)."""
+    """Apply each learned merge in order as a greedy-leftmost stack fold.
+    A just-merged stack top spells ``lhs + strip(rhs)``, strictly longer
+    than ``lhs`` (a bare ``##`` is never a symbol), so it never re-matches
+    as ``lhs`` — except when lhs == rhs, where runs resolve at even
+    offsets (pinned against ``naive_wordpiece`` in test_wordpiece)."""
     out = list(syms)
     for lhs, rhs, merged in merges:
         nxt: list = []
@@ -135,7 +101,7 @@ def _apply_merges_py(syms, merges) -> list:
     return out
 
 
-def _merged_vocab_arrow(base: DataFrame, merges: tuple) -> DataFrame:
+def _merged_vocab(base: DataFrame, merges: tuple) -> DataFrame:
     """``base`` with every merge in ``merges`` applied to ``syms`` — one
     mapInPandas carrying all other columns through unchanged."""
     if not merges:
@@ -154,7 +120,7 @@ def _merged_vocab_arrow(base: DataFrame, merges: tuple) -> DataFrame:
     return base.mapInPandas(apply, schema)
 
 
-def _wp_count_arrow(cur: DataFrame) -> DataFrame:
+def _wp_count(cur: DataFrame) -> DataFrame:
     """Adjacent-pair AND symbol unigram counts in ONE pass: per-task
     Counter partials (guide §2.3 — aggregate before you shuffle), tagged
     ``kind`` 'P'/'S', summed exactly by the downstream groupBy."""
@@ -185,12 +151,15 @@ def _wp_count_arrow(cur: DataFrame) -> DataFrame:
     )
 
 
-def _wp_train_loop_arrow(vocab: DataFrame, n_merges: int) -> tuple[list, DataFrame]:
-    """Arrow engine for the merge loop (see ``WP_ENGINE``). Exactness: the
+def _wp_train_loop(vocab: DataFrame, n_merges: int) -> tuple[list, DataFrame]:
+    """The merge-learning loop; returns (rows, FINAL vocab). Driver state
+    per round: one 5-number row plus the bounded merge list. The base
+    vocab is localCheckpoint'd once and re-checkpointed every
+    ``_WP_CHECKPOINT_EVERY`` merges; the post-merge symbol total rides the
+    next round's job as an Observation (bpe's pattern). Exactness: the
     counts are integer sums (order-free), the score division/argmax/
-    tie-break run in Spark SQL with the r16 expressions, the merge fold is
-    mirrored exactly, and the post-merge total is the same exact integer
-    sum observed on the next round's scan."""
+    tie-break run in Spark SQL, and the post-merge total is the same
+    exact integer sum observed on the next round's scan."""
     from pyspark.sql import Observation
 
     base = vocab.localCheckpoint()
@@ -199,14 +168,14 @@ def _wp_train_loop_arrow(vocab: DataFrame, n_merges: int) -> tuple[list, DataFra
     pending = None  # last round's row, waiting for its post-merge total
     for it in range(n_merges):
         if len(merges) >= _WP_CHECKPOINT_EVERY:
-            base = _merged_vocab_arrow(base, tuple(merges)).localCheckpoint()
+            base = _merged_vocab(base, tuple(merges)).localCheckpoint()
             merges = []
         obs = Observation()
-        cur = _merged_vocab_arrow(base, tuple(merges)).observe(
+        cur = _merged_vocab(base, tuple(merges)).observe(
             obs, F.sum(F.col("freq") * F.size("syms")).alias("t")
         )
         agg = (
-            _wp_count_arrow(cur)
+            _wp_count(cur)
             .groupBy("kind", "a", "b")
             .agg(F.sum("cnt").alias("cnt"))
         )
@@ -253,7 +222,7 @@ def _wp_train_loop_arrow(vocab: DataFrame, n_merges: int) -> tuple[list, DataFra
             int(best["lhs_cnt"]),
             int(best["rhs_cnt"]),
         )
-    final = _merged_vocab_arrow(base, tuple(merges))
+    final = _merged_vocab(base, tuple(merges))
     if pending is not None:
         total = final.agg(
             F.sum(F.col("freq") * F.size("syms")).alias("t")
@@ -262,82 +231,11 @@ def _wp_train_loop_arrow(vocab: DataFrame, n_merges: int) -> tuple[list, DataFra
     return results, final
 
 
-def _wp_train_loop(
-    vocab: DataFrame, n_merges: int, engine: str | None = None
-) -> tuple[list, DataFrame]:
-    """The merge-learning loop; returns (rows, FINAL vocab). Driver state
-    per round: one 5-number row (plus the bounded merge list on the arrow
-    engine)."""
-    if (engine or WP_ENGINE) == "arrow":
-        return _wp_train_loop_arrow(vocab, n_merges)
-    cur = vocab.persist()
-    results = []
-    for it in range(n_merges):
-        pairs = (
-            cur.select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "zip_with(slice(syms, 1, size(syms) - 1),"
-                        "         slice(syms, 2, size(syms) - 1),"
-                        "         (a, b) -> struct(a AS lhs, b AS rhs))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.lhs", "p.rhs")
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        sym_counts = (
-            cur.select("freq", F.explode("syms").alias("sym"))
-            .groupBy("sym")
-            .agg(F.sum("freq").alias("scnt"))
-        )
-        scored = (
-            pairs.join(
-                sym_counts.select(
-                    F.col("sym").alias("lhs"), F.col("scnt").alias("lhs_cnt")
-                ),
-                "lhs",
-            )
-            .join(
-                sym_counts.select(
-                    F.col("sym").alias("rhs"), F.col("scnt").alias("rhs_cnt")
-                ),
-                "rhs",
-            )
-            .withColumn(
-                "score",
-                F.col("cnt").cast("double") / (F.col("lhs_cnt") * F.col("rhs_cnt")),
-            )
-        )
-        top = scored.orderBy(F.desc("score"), "lhs", "rhs").limit(1).collect()
-        if not top:  # all-single-symbol vocabulary
-            break
-        best = top[0]
-        nxt = cur.withColumn("syms", _merge_expr_wp(best["lhs"], best["rhs"])).persist()
-        total = nxt.agg(F.sum(F.col("freq") * F.size("syms")).alias("t")).collect()[0]["t"]
-        results.append(
-            (
-                it,
-                best["lhs"],
-                best["rhs"],
-                int(best["cnt"]),
-                int(best["lhs_cnt"]),
-                int(best["rhs_cnt"]),
-                int(total),
-            )
-        )
-        cur.unpersist()
-        cur = nxt
-    return results, cur
-
-
 def wordpiece_train(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 4,
     word_pattern: str = WORD_PATTERN,
-    engine: str | None = None,
 ) -> DataFrame:
     """Learn the first ``n_merges`` WordPiece merges from a text column.
 
@@ -352,8 +250,7 @@ def wordpiece_train(
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
     vocab = _wp_vocab(df, text_col, word_pattern).select("freq", "syms")
-    results, cur = _wp_train_loop(vocab, n_merges, engine=engine)
-    cur.unpersist()
+    results, _ = _wp_train_loop(vocab, n_merges)
     return wordpiece_results_df(spark, results)
 
 
@@ -380,7 +277,6 @@ def wordpiece_model(
     text_col: str = "text",
     n_merges: int = 4,
     word_pattern: str = WORD_PATTERN,
-    engine: str | None = None,
 ) -> tuple[list, DataFrame]:
     """TRAIN-OFFLINE artifact pair for WordPiece — the deployment split the
     round-9 bench breach asked for (VERDICT r9 #1; same shape as
@@ -399,9 +295,8 @@ def wordpiece_model(
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
     vocab = _wp_vocab(df, text_col, word_pattern)
-    results, cur = _wp_train_loop(vocab, n_merges, engine=engine)
+    results, cur = _wp_train_loop(vocab, n_merges)
     seg = materialize_table(cur.select("word", "syms"), prefix="zas_wp_seg_")
-    cur.unpersist()
     return results, seg
 
 
@@ -506,8 +401,6 @@ def wordpiece_vocab_pieces(
         r["sym"]
         for r in cur.select(F.explode("syms").alias("sym")).distinct().collect()
     }
-    if model is None:
-        cur.unpersist()
     # merged symbols from the training rows; the surviving alphabet plus
     # ALL merge products is the standard WordPiece vocab (a merge's parts
     # stay in the vocab — serving may still need them)

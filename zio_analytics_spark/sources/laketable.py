@@ -1941,6 +1941,23 @@ def merge(
     raise ConcurrentCommitError(snapshot(table).version + 1)
 
 
+def _hit_files(
+    spark: SparkSession, table: str, snap: LakeSnapshot, predicate: str
+) -> list[str]:
+    """Rel paths of the live files holding at least one row that matches
+    ``predicate`` — the rewrite set of DELETE/UPDATE. File identity is
+    the ``__dv_base`` basename :func:`_read_files` already derives from
+    ``_metadata.file_path`` (uuid-unique per published file), so it also
+    holds on reads that anti-join a deletion vector, where Spark rejects
+    the file-name function as ambiguous across the join's two sources."""
+    by_name = {os.path.basename(p): p for p in snap.files}
+    live = _read_files(spark, table, snap, with_pos=True)
+    return [
+        by_name[r["__dv_base"]]
+        for r in live.where(predicate).select("__dv_base").distinct().collect()
+    ]
+
+
 def delete_where(
     spark: SparkSession,
     table: str,
@@ -1976,14 +1993,7 @@ def delete_where(
             extra_info={"mode": "dv"},
         )
     snap = snapshot(table)
-    live = _read_files(spark, table, snap).withColumn(
-        "__file", F.input_file_name()
-    )
-    by_name = {os.path.basename(p): p for p in snap.files}
-    hit_files = [
-        by_name[r["__file"].split("/")[-1]]
-        for r in live.where(predicate).select("__file").distinct().collect()
-    ]
+    hit_files = _hit_files(spark, table, snap, predicate)
     if not hit_files:
         return snap.version  # no-op: nothing matched
     # SQL DELETE semantics: a row whose predicate evaluates to NULL is
@@ -2078,14 +2088,7 @@ def update_where(
             "UPDATE",
             extra_info={"mode": "dv"},
         )
-    live = _read_files(spark, table, snap).withColumn(
-        "__file", F.input_file_name()
-    )
-    by_name = {os.path.basename(p): p for p in snap.files}
-    hit_files = [
-        by_name[r["__file"].split("/")[-1]]
-        for r in live.where(predicate).select("__file").distinct().collect()
-    ]
+    hit_files = _hit_files(spark, table, snap, predicate)
     if not hit_files:
         return snap.version  # no-op: nothing matched
     rewritten = mutate(
