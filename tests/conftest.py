@@ -37,3 +37,40 @@ def _sweep_stream_tmpdirs():
     from zio_analytics_spark import tmpdirs
 
     tmpdirs.cleanup()
+
+
+@pytest.fixture(scope="session")
+def embeddings_oracle():
+    """``run(df, sql)``: a catalog oracle query run in DuckDB over ``df``
+    registered as the ``embeddings`` table; returns the result rows."""
+    import duckdb
+
+    def run(df, sql):
+        con = duckdb.connect()
+        try:
+            con.register("embeddings", df.toArrow())
+            return con.execute(sql).fetchall()
+        finally:
+            con.close()
+
+    return run
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)``: run ``fn`` under a fresh job group and return how
+    many Spark jobs it launched."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -101,21 +101,30 @@ def test_ivfpq_residual_codes_differ_from_raw_pq(spark):
     assert cells[0] != cells[24]
 
 
-def test_pq_engines_equivalent(spark):
-    """Round-7: the arrow (mapInPandas + numpy) engine must reproduce the
-    codegen engine exactly — codebooks, codes, and ADC results."""
+def _first_query(df):
+    return [float(v) for v in df.orderBy("vec_id").first()["embedding"]]
+
+
+def test_pq_engines_equivalent(spark, embeddings_oracle):
+    """PQ training, encoding and ADC search equal the catalog's DuckDB
+    replay (the similarity_pq_adc oracle) on the same frame: every row's
+    ADC distance to the smallest-id vector, ranked."""
+    from zio_analytics_spark.catalog import _pq_oracle
+
     df = _planted(spark, n_clusters=4, per=12, d=8)
-    cb_cg = pq_train(df, m=2, k=4, n_iter=3, dim=8, engine="codegen")
-    cb_ar = pq_train(df, m=2, k=4, n_iter=3, dim=8, engine="arrow")
-    assert cb_cg == cb_ar
-    enc_cg = {r.vec_id: list(r.codes) for r in pq_encode(df, cb_cg, engine="codegen").collect()}
-    enc_ar = {r.vec_id: list(r.codes) for r in pq_encode(df, cb_cg, engine="arrow").collect()}
-    assert enc_cg == enc_ar
+    cbs = pq_train(df, m=2, k=4, n_iter=3, dim=8)
+    got = pq_adc_topk(pq_encode(df, cbs), cbs, _first_query(df), top_k=48).collect()
+    assert len(got) == 48
+    assert [tuple(r) for r in got] == embeddings_oracle(
+        df, _pq_oracle(m=2, k=4, sub=4, n_iter=3, topk=48)
+    )
 
 
-def test_ivfpq_engines_equivalent_and_fit_encode(spark):
-    """ivfpq arrow engine == codegen engine for train/encode/search, and
-    ivfpq_fit_encode (single coarse-assignment pass) == train-then-encode."""
+def test_ivfpq_engines_equivalent_and_fit_encode(spark, embeddings_oracle):
+    """ivfpq_fit_encode + ivfpq_search equal the catalog's DuckDB replay
+    (the similarity_ivfpq oracle) on the same frame, and ivfpq_fit_encode
+    (single coarse-assignment pass) == train-then-encode."""
+    from zio_analytics_spark.catalog import _ivfpq_oracle
     from zio_analytics_spark.operators.pq import (
         ivfpq_encode,
         ivfpq_fit_encode,
@@ -124,55 +133,30 @@ def test_ivfpq_engines_equivalent_and_fit_encode(spark):
     )
 
     df = _planted(spark, n_clusters=4, per=12, d=8)
-    co_cg, cb_cg = ivfpq_train(df, n_cells=4, m=2, k=4, n_iter=2, dim=8, engine="codegen")
-    co_ar, cb_ar = ivfpq_train(df, n_cells=4, m=2, k=4, n_iter=2, dim=8, engine="arrow")
-    assert co_cg == co_ar and cb_cg == cb_ar
-    enc_cg = {
-        r.vec_id: (r.cell, list(r.codes))
-        for r in ivfpq_encode(df, co_cg, cb_cg, engine="codegen").collect()
-    }
-    enc_ar = {
-        r.vec_id: (r.cell, list(r.codes))
-        for r in ivfpq_encode(df, co_cg, cb_cg, engine="arrow").collect()
-    }
-    assert enc_cg == enc_ar
+    co, cb = ivfpq_train(df, n_cells=4, m=2, k=4, n_iter=2, dim=8)
+    enc = {r.vec_id: (r.cell, list(r.codes)) for r in ivfpq_encode(df, co, cb).collect()}
 
     co_f, cb_f, enc_f = ivfpq_fit_encode(df, n_cells=4, m=2, k=4, n_iter=2, dim=8)
-    assert co_f == co_cg and cb_f == cb_cg
-    assert {r.vec_id: (r.cell, list(r.codes)) for r in enc_f.collect()} == enc_cg
+    assert co_f == co and cb_f == cb
+    assert {r.vec_id: (r.cell, list(r.codes)) for r in enc_f.collect()} == enc
 
-    enc = ivfpq_encode(df, co_cg, cb_cg)
-    query = df.where("vec_id = 30").collect()[0]["embedding"]
-    s_cg = [
-        tuple(r)
-        for r in ivfpq_search(enc, co_cg, cb_cg, query, nprobe=2, top_k=10, engine="codegen").collect()
-    ]
-    s_ar = [
-        tuple(r)
-        for r in ivfpq_search(enc, co_cg, cb_cg, query, nprobe=2, top_k=10, engine="arrow").collect()
-    ]
-    assert s_cg == s_ar
+    got = ivfpq_search(enc_f, co_f, cb_f, _first_query(df), nprobe=2, top_k=48)
+    assert [tuple(r) for r in got.collect()] == embeddings_oracle(
+        df, _ivfpq_oracle(4, 2, 4, 4, 8, 2, 2, 48)
+    )
 
 
 def test_pq_production_parameter_plan_ceiling(spark):
-    """Round-7 scale pin: at real-world PQ parameters (k=256, m=8, d=256 —
-    ~65k inlined literals on the codegen path, measured ~80 s of py4j plan
-    construction) the auto engine must route to the arrow path and build +
-    analyze + execute the encode plan in seconds, not minutes."""
+    """Scale pin: at real-world PQ parameters (k=256, m=8, d=256 — ~65k
+    codebook values, which a literal-inlined plan would take minutes to
+    build) encoding and probed ADC search each build + analyze + execute
+    in seconds, not minutes."""
     import random
     import time
 
-    from zio_analytics_spark.operators.pq import _pick_engine
+    from zio_analytics_spark.operators.pq import ivfpq_encode, ivfpq_search
 
     k, m, d = 256, 8, 256
-    assert _pick_engine("auto", k * d) == "arrow"
-    # Round-16: the auto threshold moved 2048 -> 384 (Janino COMPILE cost
-    # dominates below the old plan-BUILD wall; measured in pq.py's module
-    # docstring), so the shipped 16x64 shape now routes to arrow too and
-    # only genuinely small expressions keep codegen.
-    assert _pick_engine("auto", 16 * 64) == "arrow"
-    assert _pick_engine("auto", 2 * 4 * 16) == "codegen"  # ivfpq_search LUTs
-
     rnd = random.Random(11)
     sub_d = d // m
     cbs = [
@@ -186,7 +170,7 @@ def test_pq_production_parameter_plan_ceiling(spark):
         F.array(*[F.rand(seed=3) for _ in range(d)]).alias("embedding"),
     )
     t0 = time.time()
-    enc = pq_encode(df, cbs)  # engine=auto -> arrow
+    enc = pq_encode(df, cbs)
     enc.schema  # analysis
     n = enc.count()  # execution
     elapsed = time.time() - t0
@@ -195,12 +179,25 @@ def test_pq_production_parameter_plan_ceiling(spark):
     assert len(codes) == m and all(0 <= c < k for c in codes)
     assert elapsed < 15.0, f"production-parameter encode took {elapsed:.1f}s"
 
+    # probed search: nprobe·m·k = 16384 literal LUT values in one CASE;
+    # querying a stored vector keeps its own cell among the probed ones
+    coarse = [[rnd.uniform(0, 1) for _ in range(d)] for _ in range(64)]
+    ivf = ivfpq_encode(df, coarse, cbs)
+    query = [float(v) for v in df.orderBy("vec_id").first()["embedding"]]
+    t0 = time.time()
+    hits = ivfpq_search(ivf, coarse, cbs, query, nprobe=8, top_k=10).collect()
+    elapsed = time.time() - t0
+    assert 0 < len(hits) <= 10
+    assert elapsed < 15.0, f"production-parameter search took {elapsed:.1f}s"
 
-def test_pq_engines_equivalent_randomized(spark):
-    """Randomized dims/params: arrow and codegen engines must emit the
-    identical codes (the closest real argmin-tie stress available —
-    uniform random vectors with several (m, k, d) shapes)."""
+
+def test_pq_engines_equivalent_randomized(spark, embeddings_oracle):
+    """Randomized dims/params: PQ equals the catalog's DuckDB replay on
+    uniform random vectors at several (m, k, d) shapes — the closest real
+    argmin-tie stress available — every row's ADC distance, ranked."""
     import random
+
+    from zio_analytics_spark.catalog import _pq_oracle
 
     rnd = random.Random(99)
     for m, k, d in ((2, 3, 8), (4, 5, 16), (1, 7, 6)):
@@ -208,11 +205,26 @@ def test_pq_engines_equivalent_randomized(spark):
             (i, [rnd.uniform(-3, 3) for _ in range(d)]) for i in range(40)
         ]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        cbs = pq_train(df, m=m, k=k, n_iter=2, dim=d, engine="codegen")
-        assert cbs == pq_train(df, m=m, k=k, n_iter=2, dim=d, engine="arrow"), (m, k, d)
-        a = {r.vec_id: list(r.codes) for r in pq_encode(df, cbs, engine="codegen").collect()}
-        b = {r.vec_id: list(r.codes) for r in pq_encode(df, cbs, engine="arrow").collect()}
-        assert a == b, (m, k, d)
+        cbs = pq_train(df, m=m, k=k, n_iter=2, dim=d)
+        got = pq_adc_topk(pq_encode(df, cbs), cbs, _first_query(df), top_k=40)
+        assert [tuple(r) for r in got.collect()] == embeddings_oracle(
+            df, _pq_oracle(m=m, k=k, sub=d // m, n_iter=2, topk=40)
+        ), (m, k, d)
+
+
+def test_pq_jobs_per_call(spark, count_jobs):
+    """Pinned job counts: each Lloyd run is one init collect plus two jobs
+    per update; ivfpq_fit_encode adds the residual table write, and the
+    encoded frame's collect is one more."""
+    from zio_analytics_spark.operators.pq import ivfpq_fit_encode
+
+    df = _planted(spark)
+    assert count_jobs(lambda: pq_train(df, m=2, k=4, n_iter=3, dim=8)) == 5
+
+    def fit_encode():
+        ivfpq_fit_encode(df, n_cells=4, m=2, k=4, n_iter=2, dim=8)[2].collect()
+
+    assert count_jobs(fit_encode) == 8
 
 
 def test_ivfpq_recall_on_real_embeddings(spark, sf_dir):

@@ -1,6 +1,8 @@
 """Skyline / Pareto frontier (operators/skyline.py): hand-built frontiers,
-window-vs-join engine equivalence (including randomized), tie and duplicate
-semantics, and the no-self-join plan shape of the window strategy."""
+window-vs-join strategy equivalence (including randomized), tie and
+duplicate semantics, and the no-self-join plan shape of the window
+strategy. The two strategies are called directly; the dominance join is
+the window strategy's reference."""
 
 from __future__ import annotations
 
@@ -8,7 +10,13 @@ import random
 
 import pytest
 
-from zio_analytics_spark.operators.skyline import pareto_frontier
+from zio_analytics_spark.operators.skyline import (
+    _frontier_join,
+    _frontier_window,
+    pareto_frontier,
+)
+
+STRATEGIES = {"window": _frontier_window, "join": _frontier_join}
 
 
 def _rows(spark, rows):
@@ -44,37 +52,22 @@ def test_hand_built_frontier_both_engines(spark):
         (6, "y", 99.0, 1),  # alone in its block → frontier
     ]
     df = _rows(spark, rows)
-    for engine in ("window", "join"):
-        got = _frontier_ids(
-            pareto_frontier(
-                df, minimize=["price"], maximize=["size"],
-                block_cols=["blk"], engine=engine,
-            )
-        )
-        assert got == [1, 2, 5, 6], engine
+    for name, frontier in STRATEGIES.items():
+        got = _frontier_ids(frontier(df, ["price"], ["size"], ["blk"]))
+        assert got == [1, 2, 5, 6], name
 
 
 def test_exact_duplicates_both_survive(spark):
     rows = [(1, "x", 10.0, 5), (2, "x", 10.0, 5), (3, "x", 9.0, 6)]
     df = _rows(spark, rows)
-    for engine in ("window", "join"):
-        got = _frontier_ids(
-            pareto_frontier(
-                df, minimize=["price"], maximize=["size"],
-                block_cols=["blk"], engine=engine,
-            )
-        )
+    for name, frontier in STRATEGIES.items():
+        got = _frontier_ids(frontier(df, ["price"], ["size"], ["blk"]))
         # 3 dominates both duplicates; duplicates of a frontier point co-own it
-        assert got == [3], engine
+        assert got == [3], name
     rows2 = [(1, "x", 10.0, 5), (2, "x", 10.0, 5)]
-    for engine in ("window", "join"):
-        got = _frontier_ids(
-            pareto_frontier(
-                _rows(spark, rows2), minimize=["price"], maximize=["size"],
-                block_cols=["blk"], engine=engine,
-            )
-        )
-        assert got == [1, 2], engine
+    for name, frontier in STRATEGIES.items():
+        got = _frontier_ids(frontier(_rows(spark, rows2), ["price"], ["size"], ["blk"]))
+        assert got == [1, 2], name
 
 
 def test_randomized_window_equals_join_equals_naive(spark):
@@ -90,14 +83,9 @@ def test_randomized_window_equals_join_equals_naive(spark):
     ]
     df = _rows(spark, rows)
     expected = _naive_frontier(rows)
-    for engine in ("window", "join"):
-        got = _frontier_ids(
-            pareto_frontier(
-                df, minimize=["price"], maximize=["size"],
-                block_cols=["blk"], engine=engine,
-            )
-        )
-        assert got == expected, engine
+    for name, frontier in STRATEGIES.items():
+        got = _frontier_ids(frontier(df, ["price"], ["size"], ["blk"]))
+        assert got == expected, name
 
 
 def test_three_criteria_uses_join_and_matches_naive(spark):
@@ -128,10 +116,6 @@ def test_validation_and_window_plan_has_no_self_join(spark):
         pareto_frontier(df, minimize=["price"], maximize=[])
     with pytest.raises(ValueError):
         pareto_frontier(df, minimize=["price"], maximize=["price"])
-    with pytest.raises(ValueError):
-        pareto_frontier(
-            df, minimize=["price"], maximize=["size"], engine="bogus"
-        )
     big = _rows(
         spark,
         [(i, "b", float(i % 7), i % 5) for i in range(100)],
@@ -151,9 +135,9 @@ def test_validation_and_window_plan_has_no_self_join(spark):
 
 
 def test_null_block_rows_agree_across_engines(spark):
-    # NULL block values form a regular group in BOTH engines (eqNullSafe):
-    # the null-block frontier is computed, not silently dropped (window)
-    # or trivially kept whole (join).
+    # NULL block values form a regular group in BOTH strategies
+    # (eqNullSafe): the null-block frontier is computed, not silently
+    # dropped (window) or trivially kept whole (join).
     rows = [
         (1, None, 10.0, 5),   # null-block frontier (cheapest)
         (2, None, 20.0, 9),   # null-block frontier
@@ -161,14 +145,10 @@ def test_null_block_rows_agree_across_engines(spark):
         (4, "x", 50.0, 1),    # alone in x
     ]
     df = _rows(spark, rows)
-    got = {}
-    for engine in ("window", "join"):
-        got[engine] = _frontier_ids(
-            pareto_frontier(
-                df, minimize=["price"], maximize=["size"],
-                block_cols=["blk"], engine=engine,
-            )
-        )
+    got = {
+        name: _frontier_ids(frontier(df, ["price"], ["size"], ["blk"]))
+        for name, frontier in STRATEGIES.items()
+    }
     assert got["window"] == got["join"] == [1, 2, 4]
 
 
@@ -178,8 +158,7 @@ def test_window_engine_no_forced_broadcast(spark):
     rows = [(i, "x", float(i), 100 - i) for i in range(20)]
     df = _rows(spark, rows)
     plan = (
-        pareto_frontier(df, minimize=["price"], maximize=["size"],
-                        block_cols=["blk"], engine="window")
+        _frontier_window(df, ["price"], ["size"], ["blk"])
         ._jdf.queryExecution().logical().toString()
     )
     assert "ResolvedHint" not in plan

@@ -7901,8 +7901,9 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataFrame-native k-means (operators/clustering.py): Lloyd's
     algorithm, 3 fixed iterations, k=10 over the 64-dim embeddings — the
     MLlib-shaped distributed iteration with bounded k·d driver state,
-    inlined-literal distance expressions (codegen, no UDF), and one
-    k×d-cell aggregate per round. Every determinism lever is pinned so
+    one Arrow-batch numpy argmin pass per assignment (centroids as
+    closure state, no per-row UDF), and one k×d-cell aggregate per
+    round. Every determinism lever is pinned so
     the DuckDB oracle replays ALL three iterations and every final
     assignment exactly: data-derived init (k smallest ids), ties to the
     lowest cluster index, centroids rounded 6 dp per update (summation-

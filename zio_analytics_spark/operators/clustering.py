@@ -2,17 +2,24 @@
 
 The MLlib-shaped iteration without the MLlib dependency: centroids are
 BOUNDED driver state (k·d doubles — the same materialization a broadcast
-performs), each iteration is one scan with the k distance expressions
-inlined as literals (whole-stage codegen, no UDF) plus one k×d-cell
-aggregate. At 100 TB that is: per-iteration cost = one pass over the data
-+ a k·d-sized shuffle — the known-optimal distributed Lloyd shape.
+performs), each iteration is one scan plus one k×d-cell aggregate. At
+100 TB that is: per-iteration cost = one pass over the data + a k·d-sized
+shuffle — the known-optimal distributed Lloyd shape.
+
+The Lloyd loop and the distance kernel are the ones PQ and IVF-PQ use
+(:func:`~zio_analytics_spark.operators.pq._lloyd_full`): each assignment
+is one ``mapInPandas`` pass with the centroids as closure state and a
+numpy argmin over the expanded ‖x‖²−2x·c+‖c‖² distances, so the plan has
+O(1) nodes at any k·d. The final assignment is one more such pass
+(:func:`~zio_analytics_spark.operators.pq.pq_encode` with the centroids
+as a single codebook).
 
 Determinism contract (what makes a DuckDB oracle replay possible):
 
 - init = the embeddings of the k smallest ids (data-derived, no RNG);
-- ties in the argmin break toward the LOWEST cluster index (Spark
-  ``array_position`` takes the first minimum; the oracle orders by
-  ``(dist, j)``);
+- ties in the argmin break toward the LOWEST cluster index (numpy
+  ``argmin`` takes the first minimum; the oracle orders by
+  ``(dist, j)``) — up to the sub-ulp caveat in pq.py's module docstring;
 - centroid coordinates are ROUNDED (default 6 dp) after every update, so
   cross-engine summation-order ulps in the per-cluster means cannot
   accumulate across iterations;
@@ -21,16 +28,6 @@ Determinism contract (what makes a DuckDB oracle replay possible):
 Iteration count is FIXED (like :func:`~zio_analytics_spark.operators.
 graph.pagerank`): convergence-threshold stopping would make the plan
 data-dependent and the oracle unreplayable.
-
-PRODUCTION-PARAMETER CEILING (round-7, shared with operators/pq.py): the
-literal-inlined assign expression is k·d literals; plan CONSTRUCTION
-(py4j Column building) is literal-count-linear and hits ~80 s around 65k
-literals. ``engine="auto"`` therefore routes to an arrow (mapInPandas +
-numpy argmin) assignment above the same 2048-literal threshold pq uses —
-centroids as closure state, O(1) plan nodes — while the shipped catalog
-shapes (k=10, d=64 → 640 literals) keep the codegen path and its
-bit-exact oracle replay. Engine equivalence is asserted in
-test_clustering.
 """
 
 from __future__ import annotations
@@ -49,74 +46,15 @@ def kmeans_assign(
     n_iter: int = 3,
     dim: int | None = None,
     round_dp: int = 6,
-    engine: str = "auto",
 ) -> DataFrame:
     """Lloyd's k-means for ``n_iter`` fixed iterations; returns
     ``(id_col, cluster)`` — every row's assignment under the final
     centroids. ``dim`` defaults to the length of the first vector."""
-    from zio_analytics_spark.operators.pq import _pick_engine
+    from zio_analytics_spark.operators.pq import _lloyd_full, pq_encode
 
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
-    eng = _pick_engine(engine, k * dim)
-    init = df.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
-    if len(init) < k:
-        raise ValueError(f"need at least k={k} rows, got {len(init)}")
-    cents = [[float(x) for x in r[vec_col]] for r in init]
-
-    def assign_arrow(frame):
-        import numpy as np
-        import pandas as pd
-
-        C = np.asarray(cents, dtype=np.float64)
-        id_type = frame.schema[id_col].dataType.simpleString()
-
-        def fn(pdfs):
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(1)[None, :]
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy(),
-                        vec_col: list(X),
-                        "cluster": d2.argmin(1).astype(np.int32),
-                    }
-                )
-
-        return frame.select(id_col, vec_col).mapInPandas(
-            fn, f"{id_col} {id_type}, {vec_col} array<double>, cluster int"
-        )
-
-    def assign_expr():
-        # ||x − c||² per centroid via zip_with + left-fold aggregate: the
-        # SAME i-ascending (x_i − c_i)² summation as an explicit 64-term
-        # sum, but an O(k)-node expression tree instead of O(k·d) — the
-        # explicit form made Catalyst analysis/codegen the dominant cost
-        # (measured 19.5 s/entry; HOF form ~2 s, identical numerics).
-        # Built as ONE F.expr SQL string (pq._argmin_sql): the Column-API
-        # form paid a py4j round-trip per literal — the round-7 plan-build
-        # finding.
-        from zio_analytics_spark.operators.pq import _argmin_expr
-
-        return _argmin_expr(f"`{vec_col}`", cents)
-
-    assigned = None
-    for t in range(n_iter):
-        if eng == "arrow":
-            assigned = assign_arrow(df)
-        else:
-            assigned = df.select(id_col, vec_col, assign_expr().alias("cluster"))
-        if t < n_iter - 1:
-            rows = assigned.groupBy("cluster").agg(
-                *[
-                    F.round(F.avg(F.col(vec_col)[i].cast("double")), round_dp).alias(
-                        f"x{i}"
-                    )
-                    for i in range(dim)
-                ]
-            ).collect()
-            new = {int(r["cluster"]): [r[f"x{i}"] for i in range(dim)] for r in rows}
-            cents = [new.get(j, cents[j]) for j in range(k)]
-    return assigned.select(id_col, "cluster")
+    cents = _lloyd_full(df, vec_col, id_col, k, n_iter, dim, round_dp)
+    return pq_encode(df, [cents], vec_col, id_col).select(
+        id_col, F.col("codes")[0].alias("cluster")
+    )

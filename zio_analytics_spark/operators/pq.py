@@ -14,11 +14,13 @@ Scale shape:
 - TRAINING is m independent Lloyd runs over subvector slices — same
   bounded-driver-state discipline as clustering.kmeans_assign (per
   iteration: one scan + a k×(d/m)-cell aggregate; only k·d doubles ever
-  sit on the driver). Production trains on a sample (pass ``train_df``);
+  sit on the driver). Production trains on a sample (pass a sampled frame);
   the codebook is what matters, not seeing every row.
-- ENCODING is one scan with the m argmin expressions inlined as Column
-  HOFs (zip_with/aggregate — whole-stage codegen, no UDF), emitting the
-  m-byte code array. This is the only full-corpus pass.
+- ASSIGNMENT (Lloyd updates, encoding, IVF residuals) runs in
+  ``mapInPandas`` + numpy: codebooks travel as an O(k·d) closure
+  broadcast and each Arrow batch computes argmin codes in the expanded
+  ‖x‖²−2x·Cᵀ+‖c‖² BLAS form (:func:`_np_subspace_codes`). The plan has
+  O(1) nodes at any k/m/d. Encoding is the only full-corpus pass.
 - ADC SEARCH broadcasts nothing and joins nothing: the m×k lookup table
   is inlined as literal arrays, so scoring is ``element_at`` sums inside
   codegen and the plan is scan → project → TakeOrdered(k).
@@ -28,47 +30,18 @@ replay every code): init = subvectors of the k smallest ids; argmin ties
 to the lowest code; centroids rounded after every update; empty clusters
 keep their previous centroid; fixed iteration count.
 
-PRODUCTION-PARAMETER CEILING (round-7): the codegen path inlines every
-codebook value as a literal — measured plan-CONSTRUCTION cost at the
-real-world PQ shape k=256/m=8/d=256 (~65k literals) was ~81 s with
-per-literal ``F.lit`` Column building (one py4j round-trip each), cut to
-~13 s by building each argmin as ONE ``F.expr`` SQL string
-(:func:`_argmin_sql` — the string assembles Python-side, the JVM parses
-it in one call; this also took the k=16 catalog entries from ~6-9 s to
-~2.5-4.4 s). Catalyst analysis itself stays <50 ms; what remains at
-production shape is SQL-parser time on a ~1.3 MB expression, still
-literal-count-linear. Every entry point therefore takes ``engine``:
-
-- ``"codegen"`` — the literal-inlined HOF path (whole-stage codegen, the
-  oracle-replayed reference semantics).
-- ``"arrow"`` — ``mapInPandas`` + numpy: codebooks travel as an O(k·d)
-  closure broadcast, each Arrow batch computes argmin codes via the
-  expanded ‖x‖²−2x·Cᵀ+‖c‖² BLAS form. O(1) plan nodes at ANY k/m/d;
-  the 100 TB path for production parameters.
-- ``"auto"`` (default) — ``"arrow"`` when the inlined-literal count would
-  exceed :data:`_CODEGEN_MAX_LITERALS`, else ``"codegen"``.
-
-Engine equivalence is tested at k=16 (test_pq): identical codes/results.
-The one documented caveat: the arrow path's BLAS summation order differs
-from the codegen path's sequential left-fold, so two centroids whose
-distances agree to <1 ulp could in principle argmin differently —
-unobservable on continuous data (centroid updates are rounded to 6 dp
-and real embeddings have distance gaps many orders above 1 ulp).
-
-The threshold was 2048 through round 15 (sized against the ~5 s plan-
-BUILD wall only, keeping every oracle-checked entry on codegen); round-16
-measurement showed Janino codegen COMPILE dominates well below that —
-similarity_ivfpq warm total 3.7 s on codegen vs 2.9 s on arrow at 512-
-to-1536 literals — so auto now flips at 384. Every affected catalog
-entry (kmeans family, PQ/IVF-PQ ladder, SemDeDup) re-verified against
-its oracle at sf0.001/sf0.01/sf0.1 after the flip.
+Tie caveat: the BLAS expanded form sums in a different order than the
+oracle's sequential (x−c)² fold, so two centroids whose distances agree
+to <1 ulp could in principle argmin differently — unobservable on
+continuous data (centroid updates are rounded to 6 dp and real
+embeddings have distance gaps many orders above 1 ulp).
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -80,18 +53,6 @@ __all__ = [
     "ivfpq_fit_encode",
     "ivfpq_search",
 ]
-
-#: codegen is preferred up to this many inlined codebook literals (~5 s of
-#: driver-side Column building); beyond it, auto switches to the arrow path.
-_CODEGEN_MAX_LITERALS = 384
-
-
-def _pick_engine(engine: str, n_literals: int) -> str:
-    if engine not in ("auto", "codegen", "arrow"):
-        raise ValueError(f"unknown pq engine: {engine!r}")
-    if engine == "auto":
-        return "arrow" if n_literals > _CODEGEN_MAX_LITERALS else "codegen"
-    return engine
 
 
 def _np_codebooks(codebooks: list):
@@ -124,35 +85,10 @@ def _sql_darr(vals) -> str:
     return "array(" + ", ".join(repr(float(v)) + "D" for v in vals) + ")"
 
 
-def _argmin_sql(sub_sql: str, cents: list) -> str:
-    """Argmin-over-centroids as ONE SQL string (round-7 plan-build fix):
-    the Column-API form paid one py4j round-trip per literal — ~1-2 s of
-    driver time per argmin build even at the toy k=16/d=64 shape, dominant
-    in the PQ catalog entries. Building the identical expression as text
-    (JVM parses it in one call) removes that cost; semantics byte-match
-    the old form: i-ascending (CAST(x AS DOUBLE) − c)² left-fold, ties to
-    the lowest index."""
-    dists = ", ".join(
-        f"aggregate(zip_with({sub_sql}, {_sql_darr(c)}, "
-        "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-        "0.0D, (a, b) -> a + b)"
-        for c in cents
-    )
-    arr = f"array({dists})"
-    return f"CAST(array_position({arr}, array_min({arr})) - 1 AS INT)"
-
-
-def _argmin_expr(sub_sql: str, cents: list) -> Column:
-    """Code = index of the nearest centroid (ties → lowest index).
-    ``sub_sql`` is a SQL fragment for the (sub)vector expression — see
-    :func:`_argmin_sql` for why text, not Columns."""
-    return F.expr(_argmin_sql(sub_sql, cents))
-
-
-def _explode_subcodes_arrow(df: DataFrame, codebooks: list, vec_col: str) -> DataFrame:
-    """Arrow twin of the codegen explode in :func:`pq_train`: one row per
-    (input row, subspace) with the subspace index, assigned code, and
-    subvector — codebooks as closure state, numpy argmin per batch."""
+def _explode_subcodes(df: DataFrame, codebooks: list, vec_col: str) -> DataFrame:
+    """One row per (input row, subspace) with the subspace index, assigned
+    code, and subvector — codebooks as closure state, numpy argmin per
+    batch."""
     import numpy as np
     import pandas as pd
 
@@ -191,7 +127,6 @@ def pq_train(
     n_iter: int = 2,
     dim: int | None = None,
     round_dp: int = 6,
-    engine: str = "auto",
 ) -> list:
     """Learn ``m`` per-subspace codebooks; returns a list of m lists of k
     centroids (each d/m floats) — bounded driver state (k·d doubles), the
@@ -201,7 +136,6 @@ def pq_train(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub_d = dim // m
-    eng = _pick_engine(engine, m * k * sub_d)
     init = df.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
     if len(init) < k:
         raise ValueError(f"need at least k={k} training rows, got {len(init)}")
@@ -210,24 +144,11 @@ def pq_train(
         for j in range(m)
     ]
     # ONE scan per iteration for ALL subspaces: each row explodes into m
-    # (subspace, code, subvector) structs and a single groupBy(j, code)
+    # (subspace, code, subvector) rows and a single groupBy(j, code)
     # computes every codebook's update — iteration cost is one pass + an
     # (m·k)×(d/m)-cell aggregate regardless of m, not m passes.
     for _t in range(n_iter - 1):
-        if eng == "arrow":
-            exploded = _explode_subcodes_arrow(df, codebooks, vec_col)
-        else:
-            structs = []
-            for j in range(m):
-                sub_sql = f"slice(`{vec_col}`, {j * sub_d + 1}, {sub_d})"
-                structs.append(
-                    f"struct({j} AS j, {_argmin_sql(sub_sql, codebooks[j])} AS code, "
-                    f"{sub_sql} AS sub)"
-                )
-            exploded = df.select(
-                F.explode(F.expr("array(" + ", ".join(structs) + ")")).alias("s")
-            ).select("s.j", "s.code", "s.sub")
-        rows = exploded.groupBy("j", "code").agg(
+        rows = _explode_subcodes(df, codebooks, vec_col).groupBy("j", "code").agg(
             *[
                 F.round(F.avg(F.col("sub")[i].cast("double")), round_dp).alias(f"x{i}")
                 for i in range(sub_d)
@@ -248,44 +169,29 @@ def pq_encode(
     codebooks: list,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    engine: str = "auto",
     passthrough_cols: list[str] | None = None,
 ) -> DataFrame:
     """One scan → ``(id_col, *passthrough_cols, codes array<int> length m)``:
     every vector replaced by its m nearest-centroid codes."""
-    m = len(codebooks)
-    sub_d = len(codebooks[0][0])
-    extra = list(passthrough_cols or [])
-    eng = _pick_engine(engine, m * len(codebooks[0]) * sub_d)
-    if eng == "arrow":
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        np_cbs = _np_codebooks(codebooks)
-        keep = [id_col] + extra
-        keep_types = [
-            f"{c} {df.schema[c].dataType.simpleString()}" for c in keep
-        ]
+    np_cbs = _np_codebooks(codebooks)
+    keep = [id_col] + list(passthrough_cols or [])
+    keep_types = [f"{c} {df.schema[c].dataType.simpleString()}" for c in keep]
 
-        def fn(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                codes = _np_subspace_codes(X, np_cbs)
-                out = {c: pdf[c].to_numpy() for c in keep}
-                out["codes"] = list(codes)
-                yield pd.DataFrame(out)
+    def fn(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for pdf in pdfs:
+            if not len(pdf):
+                continue
+            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            codes = _np_subspace_codes(X, np_cbs)
+            out = {c: pdf[c].to_numpy() for c in keep}
+            out["codes"] = list(codes)
+            yield pd.DataFrame(out)
 
-        return df.select(*keep, vec_col).mapInPandas(
-            fn, ", ".join(keep_types) + ", codes array<int>"
-        )
-    codes_sql = ", ".join(
-        _argmin_sql(f"slice(`{vec_col}`, {j * sub_d + 1}, {sub_d})", cents)
-        for j, cents in enumerate(codebooks)
-    )
-    return df.select(
-        id_col, *extra, F.expr(f"array({codes_sql})").alias("codes")
+    return df.select(*keep, vec_col).mapInPandas(
+        fn, ", ".join(keep_types) + ", codes array<int>"
     )
 
 
@@ -302,7 +208,7 @@ def pq_adc_topk(
     ``element_at`` lookups — no decompression, no join, codegen all the
     way to TakeOrdered. Returns ``(id_col, adc_dist)`` for the ``top_k``
     nearest, distance rounded to ``round_dp`` (ordering key too, so ulp-
-    level cross-engine summation drift cannot reorder the cut)."""
+    level Spark-vs-oracle summation drift cannot reorder the cut)."""
     m = len(codebooks)
     sub_d = len(codebooks[0][0])
     if len(query) != m * sub_d:
@@ -320,8 +226,8 @@ def pq_adc_topk(
     return scored.orderBy("adc_dist", id_col).limit(top_k)
 
 
-def _assign_cells_arrow(df: DataFrame, cents: list, vec_col: str) -> DataFrame:
-    """Arrow twin of the codegen coarse assignment: (__v vector, __c cell)."""
+def _assign_cells(df: DataFrame, cents: list, vec_col: str) -> DataFrame:
+    """Coarse assignment: ``(__v vector, __c nearest-centroid cell)``."""
     import numpy as np
     import pandas as pd
 
@@ -346,24 +252,17 @@ def _lloyd_full(
     n_iter: int,
     dim: int,
     round_dp: int = 6,
-    engine: str = "auto",
 ) -> list:
-    """Full-dimension Lloyd returning the CENTROIDS (the coarse quantizer
-    for IVF) under the same determinism contract as clustering.py."""
-    eng = _pick_engine(engine, k * dim)
+    """Full-dimension Lloyd returning the CENTROIDS (the k-means centroids
+    and the coarse quantizer for IVF) under the determinism contract of
+    clustering.py: ``n_iter`` − 1 rounded updates from the k-smallest-id
+    init."""
     init = df.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
     if len(init) < k:
         raise ValueError(f"need at least k={k} rows, got {len(init)}")
     cents = [[float(x) for x in r[vec_col]] for r in init]
     for _t in range(n_iter - 1):
-        if eng == "arrow":
-            assigned = _assign_cells_arrow(df, cents, vec_col)
-        else:
-            assigned = df.select(
-                F.col(vec_col).alias("__v"),
-                _argmin_expr(f"`{vec_col}`", cents).alias("__c"),
-            )
-        rows = assigned.groupBy("__c").agg(
+        rows = _assign_cells(df, cents, vec_col).groupBy("__c").agg(
             *[
                 F.round(F.avg(F.col("__v")[i].cast("double")), round_dp).alias(f"x{i}")
                 for i in range(dim)
@@ -374,10 +273,11 @@ def _lloyd_full(
     return cents
 
 
-def _assign_residual_arrow(
+def _assign_residual(
     df: DataFrame, coarse: list, vec_col: str, id_col: str
 ) -> DataFrame:
-    """Arrow path: one pass → ``(id, cell, __res residual vector)``."""
+    """``(id, cell, __res residual vector)`` in one pass — the shared first
+    stage of IVF-PQ training and encoding."""
     import numpy as np
     import pandas as pd
 
@@ -400,20 +300,6 @@ def _assign_residual_arrow(
     )
 
 
-def _assign_residual(
-    df: DataFrame, coarse: list, vec_col: str, id_col: str, engine: str = "auto"
-) -> DataFrame:
-    """``(id, cell, __res)`` — the shared first stage of IVF-PQ training and
-    encoding (engine-dispatched)."""
-    eng = _pick_engine(engine, len(coarse) * len(coarse[0]))
-    if eng == "arrow":
-        return _assign_residual_arrow(df, coarse, vec_col, id_col)
-    assigned = df.select(
-        id_col, vec_col, _argmin_expr(f"`{vec_col}`", coarse).alias("cell")
-    )
-    return assigned.select(id_col, "cell", _residual_expr(vec_col, coarse).alias("__res"))
-
-
 def ivfpq_train(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -423,7 +309,6 @@ def ivfpq_train(
     k: int = 16,
     n_iter: int = 2,
     dim: int | None = None,
-    engine: str = "auto",
 ) -> tuple[list, list]:
     """Train the two quantizer tiers: the coarse (IVF) centroids on full
     vectors, then PQ codebooks on the RESIDUALS x − centroid[cell] —
@@ -437,13 +322,12 @@ def ivfpq_train(
     table once and feeds both codebook training and encoding from it."""
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
-    coarse = _lloyd_full(df, vec_col, id_col, n_cells, n_iter, dim, engine=engine)
-    res_df = _assign_residual(df, coarse, vec_col, id_col, engine).select(
+    coarse = _lloyd_full(df, vec_col, id_col, n_cells, n_iter, dim)
+    res_df = _assign_residual(df, coarse, vec_col, id_col).select(
         id_col, F.col("__res").alias(vec_col)
     )
     codebooks = pq_train(
-        res_df, vec_col=vec_col, id_col=id_col, m=m, k=k, n_iter=n_iter, dim=dim,
-        engine=engine,
+        res_df, vec_col=vec_col, id_col=id_col, m=m, k=k, n_iter=n_iter, dim=dim
     )
     return coarse, codebooks
 
@@ -457,7 +341,6 @@ def ivfpq_fit_encode(
     k: int = 16,
     n_iter: int = 2,
     dim: int | None = None,
-    engine: str = "auto",
 ) -> tuple[list, list, DataFrame]:
     """Train AND encode with ONE coarse-assignment pass (round-7 scan cut):
     ``ivfpq_train`` + ``ivfpq_encode`` back-to-back each compute the
@@ -473,32 +356,19 @@ def ivfpq_fit_encode(
 
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
-    coarse = _lloyd_full(df, vec_col, id_col, n_cells, n_iter, dim, engine=engine)
+    coarse = _lloyd_full(df, vec_col, id_col, n_cells, n_iter, dim)
     res_tbl = materialize_table(
-        _assign_residual(df, coarse, vec_col, id_col, engine), prefix="zas_ivfpq_res_"
+        _assign_residual(df, coarse, vec_col, id_col), prefix="zas_ivfpq_res_"
     )
     codebooks = pq_train(
         res_tbl.select(id_col, F.col("__res").alias(vec_col)),
         vec_col=vec_col, id_col=id_col, m=m, k=k, n_iter=n_iter, dim=dim,
-        engine=engine,
     )
     encoded = pq_encode(
         res_tbl.select(id_col, "cell", F.col("__res").alias(vec_col)),
-        codebooks, vec_col=vec_col, id_col=id_col, engine=engine,
-        passthrough_cols=["cell"],
+        codebooks, vec_col=vec_col, id_col=id_col, passthrough_cols=["cell"],
     ).select(id_col, "cell", "codes")
     return coarse, codebooks, encoded
-
-
-def _residual_expr(vec_col: str, cents: list) -> Column:
-    """x − coarse_centroid[cell] as one Column expression: the per-cell
-    centroid arrays inline as an array-of-arrays literal indexed by the
-    cell assignment (no join, no UDF; one F.expr — the plan-build fix)."""
-    table = "array(" + ", ".join(_sql_darr(c) for c in cents) + ")"
-    return F.expr(
-        f"zip_with(`{vec_col}`, element_at({table}, cell + 1), "
-        "(x, y) -> CAST(x AS DOUBLE) - y)"
-    )
 
 
 def ivfpq_encode(
@@ -507,57 +377,39 @@ def ivfpq_encode(
     codebooks: list,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    engine: str = "auto",
 ) -> DataFrame:
     """IVF-PQ encoding (the FAISS IVFPQ layout's algebra): assign each
     vector to its nearest coarse centroid (inverted-list cell), then PQ-
     encode the RESIDUAL x − centroid[cell] — residuals are what make a
-    shared codebook accurate across cells. One scan, all codegen. Returns
-    ``(id_col, cell, codes)``; on disk this is exactly what
+    shared codebook accurate across cells. One scan, one Arrow pass.
+    Returns ``(id_col, cell, codes)``; on disk this is exactly what
     ann_index-style ``partitionBy(cell)`` layouts store, so search scans
     prune to probed cells (PartitionFilters — proven in
     similarity_ann_partitioned) and read m bytes per vector."""
-    n_lits = len(coarse) * len(coarse[0]) + len(codebooks) * len(codebooks[0]) * len(
-        codebooks[0][0]
-    )
-    eng = _pick_engine(engine, n_lits)
-    if eng == "arrow":
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        C = np.asarray(coarse, dtype=np.float64)
-        np_cbs = _np_codebooks(codebooks)
-        id_type = df.schema[id_col].dataType.simpleString()
+    C = np.asarray(coarse, dtype=np.float64)
+    np_cbs = _np_codebooks(codebooks)
+    id_type = df.schema[id_col].dataType.simpleString()
 
-        def fn(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                cells = _np_subspace_codes(X, [C])[:, 0]
-                codes = _np_subspace_codes(X - C[cells], np_cbs)
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy(),
-                        "cell": cells,
-                        "codes": list(codes),
-                    }
-                )
+    def fn(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for pdf in pdfs:
+            if not len(pdf):
+                continue
+            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            cells = _np_subspace_codes(X, [C])[:, 0]
+            codes = _np_subspace_codes(X - C[cells], np_cbs)
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col].to_numpy(),
+                    "cell": cells,
+                    "codes": list(codes),
+                }
+            )
 
-        return df.select(id_col, vec_col).mapInPandas(
-            fn, f"{id_col} {id_type}, cell int, codes array<int>"
-        )
-    assigned = df.select(
-        id_col, vec_col, _argmin_expr(f"`{vec_col}`", coarse).alias("cell")
-    )
-    sub_d = len(codebooks[0][0])
-    with_res = assigned.withColumn("__res", _residual_expr(vec_col, coarse))
-    codes_sql = ", ".join(
-        _argmin_sql(f"slice(`__res`, {j * sub_d + 1}, {sub_d})", cents)
-        for j, cents in enumerate(codebooks)
-    )
-    return with_res.select(
-        id_col, "cell", F.expr(f"array({codes_sql})").alias("codes")
+    return df.select(id_col, vec_col).mapInPandas(
+        fn, f"{id_col} {id_type}, cell int, codes array<int>"
     )
 
 
@@ -570,7 +422,6 @@ def ivfpq_search(
     top_k: int = 10,
     id_col: str = "vec_id",
     round_dp: int = 6,
-    engine: str = "auto",
 ) -> DataFrame:
     """Probed ADC search: rank coarse cells by query→centroid distance,
     keep the ``nprobe`` nearest (ties to the lower cell id), and score
@@ -578,11 +429,10 @@ def ivfpq_search(
     the query's residual against that cell. Everything driver-side is
     k_c·d + nprobe·m·k doubles; the cell filter is a literal IN list, so
     a partitioned layout prunes the scan before it reads a byte of the
-    other cells (both engines filter FIRST — the arrow scorer runs after
-    the prune)."""
+    other cells. Scoring is the literal-LUT expression of
+    :func:`pq_adc_topk`, one ``CASE`` branch per probed cell."""
     m = len(codebooks)
     sub_d = len(codebooks[0][0])
-    k = len(codebooks[0])
     qd = [
         sum((float(qv) - cv) ** 2 for qv, cv in zip(query, cent))
         for cent in coarse
@@ -600,35 +450,6 @@ def ivfpq_search(
             for j, cents in enumerate(codebooks)
         ]
     pruned = encoded.where(F.col("cell").isin(probed))
-    eng = _pick_engine(engine, nprobe * m * k)
-    if eng == "arrow":
-        import numpy as np
-        import pandas as pd
-
-        np_luts = {c: np.asarray(t, dtype=np.float64) for c, t in luts.items()}
-        id_type = encoded.schema[id_col].dataType.simpleString()
-
-        def fn(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-                cells = pdf["cell"].to_numpy()
-                dist = np.empty(len(pdf), dtype=np.float64)
-                j_idx = np.arange(codes.shape[1])
-                for c, lut in np_luts.items():
-                    mask = cells == c
-                    if mask.any():
-                        dist[mask] = lut[j_idx[None, :], codes[mask]].sum(1)
-                yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "__d": dist})
-
-        scored = pruned.select(id_col, "cell", "codes").mapInPandas(
-            fn, f"{id_col} {id_type}, __d double"
-        ).select(
-            # round in Spark (HALF_UP) so both engines share rounding semantics
-            id_col, F.round(F.col("__d"), round_dp).alias("adc_dist")
-        )
-        return scored.orderBy("adc_dist", id_col).limit(top_k)
     dist_sql = "CAST(NULL AS DOUBLE)"
     for cell in probed:
         terms = ["0.0D"] + [

@@ -7,9 +7,10 @@ frontier is the set of non-dominated rows — the standard multi-objective
 shortlist (cheapest-vs-largest parts, fastest-vs-freshest replicas,
 quality-vs-length training documents).
 
-Two physical strategies, equivalence-tested against each other:
+Two physical strategies, chosen from the number of criteria and
+equivalence-tested against each other:
 
-- ``engine="window"`` (2 criteria only — the common case): after
+- :func:`_frontier_window` (exactly 2 criteria — the common case): after
   pre-aggregating to one row per (block, x) with the best y — max y per
   price, say — a single ordered window over that DEDUPLICATED tier table
   computes the running best-y over all strictly-better x; a row is on the
@@ -18,7 +19,8 @@ Two physical strategies, equivalence-tested against each other:
   self-join, no O(n²) anywhere — this is the sort-filter skyline
   restated as relational operators, and the shape that holds at 100 TB
   (the window runs over the collapsed tier table, not raw rows).
-- ``engine="join"`` (any number of criteria): block-local dominance
+- :func:`_frontier_join` (any number of criteria; runs for three or
+  more): block-local dominance
   anti-join — quadratic WITHIN a block, so it requires block columns
   that bound block size (same candidate-blocking discipline as
   ``dedup.jaccard_pairs``). The NOT-EXISTS oracle is this strategy
@@ -45,27 +47,20 @@ def pareto_frontier(
     minimize: Sequence[str],
     maximize: Sequence[str],
     block_cols: Sequence[str] = (),
-    engine: str = "auto",
 ) -> DataFrame:
     """Rows of ``df`` not dominated within their block. ``minimize`` /
     ``maximize`` name the criteria; ``block_cols`` scope dominance (rows in
-    different blocks never compare). ``auto`` picks the window strategy for
-    exactly two criteria, the dominance join otherwise."""
+    different blocks never compare). Two criteria run the window strategy,
+    more run the dominance join."""
     mins, maxs = list(minimize), list(maximize)
     crit = mins + maxs
     if len(crit) < 2:
         raise ValueError("need at least two criteria")
     if len(set(crit)) != len(crit):
         raise ValueError("criteria must be distinct columns")
-    if engine == "auto":
-        engine = "window" if len(crit) == 2 else "join"
-    if engine == "window":
-        if len(crit) != 2:
-            raise ValueError("window engine handles exactly two criteria")
+    if len(crit) == 2:
         return _frontier_window(df, mins, maxs, list(block_cols))
-    if engine == "join":
-        return _frontier_join(df, mins, maxs, list(block_cols))
-    raise ValueError(f"unknown skyline engine: {engine!r}")
+    return _frontier_join(df, mins, maxs, list(block_cols))
 
 
 def _directed(mins: list[str], maxs: list[str]):
@@ -103,7 +98,7 @@ def _frontier_window(
     # semi-join raw rows back: a row survives iff its (u, v) tier point is
     # a frontier point (equal-on-both duplicates all survive). Block keys
     # compare null-safely — NULL is a regular group, matching the groupBy
-    # above and the join engine. No broadcast hint: the frontier is
+    # above and the join strategy. No broadcast hint: the frontier is
     # unbounded in the worst case (anti-correlated criteria put every
     # distinct-u tier on it), so let AQE pick the strategy from measured
     # size instead of forcing a driver-side materialization.
@@ -135,7 +130,7 @@ def _frontier_join(
         for c, _ in dirs
     ]
     # Null-safe: NULL block values form a regular group (same contract as
-    # the window engine's groupBy), instead of silently never matching.
+    # the window strategy's groupBy), instead of silently never matching.
     cond = [F.col(f"a.{c}").eqNullSafe(F.col(f"b.{c}")) for c in blocks]
     dominates = ge[0]
     for g in ge[1:]:
